@@ -13,6 +13,11 @@ Catalyst can optimize instead of pandas merges:
 * `catalog_validate` ⇔ `catalog search/stage5_output_final_csv.py:261`
   validate_csv_data: per-source required-field/row-count audit before
   deployment.
+
+The merge and validation bodies (`merge_from_delta`, `validate_master`)
+take their upstream DataFrame, so the refresh pipeline feeds them the
+delta and master it has written; the registry functions derive that
+upstream from `documents`.
 * `refresh_upsert` ⇔ `semantic search/stage_06_database_upload.py:161`
   upload_csv_with_staging: staging-table upsert = delete rows whose key
   appears in the incoming batch, then insert the batch.
@@ -163,11 +168,11 @@ FROM joined
 
 # --- master merge (delete + append with sequential ids) ----------------------
 
-def catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+def merge_from_delta(spark: SparkSession, sf_dir: str, delta: DataFrame) -> DataFrame:
     """Master after one refresh cycle: survivors keep their ids; new and
     updated files are (re)appended with ids max(id)+1, max(id)+2, …
-    ordered by file_name (stage4 get_next_id semantics)."""
-    delta = catalog_delta(spark, sf_dir)
+    ordered by file_name (stage4 get_next_id semantics). ``delta`` is
+    `catalog_delta`'s output, as computed or as read back once written."""
     master = _master(spark, sf_dir)
     survivors = master.join(
         delta.where(F.col("needs_delete") == 1).select("file_name"), "file_name", "left_anti"
@@ -196,6 +201,10 @@ def catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return survivors.unionAll(incoming)
 
 
+def catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return merge_from_delta(spark, sf_dir, catalog_delta(spark, sf_dir))
+
+
 CATALOG_MERGE_SQL = f"""
 WITH {SNAPSHOT_SQL.strip()}, {MASTER_SQL.strip()},
 delta AS (
@@ -222,10 +231,10 @@ FROM delta WHERE action IN ('new', 'updated')
 
 # --- pre-deployment validation -----------------------------------------------
 
-def catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
+def validate_master(merged: DataFrame) -> DataFrame:
     """Per-source audit of the merged master (stage5 validate_csv_data:
-    required fields present, no duplicate keys, counts)."""
-    merged = catalog_merge(spark, sf_dir)
+    required fields present, no duplicate keys, counts); one row per
+    document_source."""
     return merged.groupBy("document_source").agg(
         F.count(F.lit(1)).alias("n_records"),
         F.sum(F.col("file_name").isNull().cast("int")).alias("n_null_name"),
@@ -235,6 +244,10 @@ def catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("id").alias("max_id"),
         F.sum((F.col("row_status") == "appended").cast("int")).alias("n_appended"),
     )
+
+
+def catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return validate_master(catalog_merge(spark, sf_dir))
 
 
 CATALOG_VALIDATE_SQL = f"""

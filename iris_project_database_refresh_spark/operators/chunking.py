@@ -40,28 +40,36 @@ CHUNK_TOKENS = 32
 SECTION_TOKENS = 64
 
 
-def _windows(toks: Column, size: int) -> Column:
-    """Array of space-joined token windows of `size` (last may be short)."""
+def _windows(toks: str, size: int) -> Column:
+    """Array of token windows of `size` (last may be short) over the
+    token-array column named `toks`. The column must already hold the
+    tokens: Spark evaluates the lambda once per window, so a tokeniser
+    inside it would re-split the whole text for every window."""
     n_windows = F.ceil(F.size(toks) / F.lit(size)).cast("int")
     return F.transform(
         F.sequence(F.lit(0), n_windows - 1),
-        lambda i: F.array_join(F.slice(toks, i * size + 1, size), " "),
+        lambda i: F.slice(toks, i * size + 1, size),
+    )
+
+
+def _tokenised(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents as (doc_id, source, toks): `text` tokenised once."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", tokens(F.col("text")).alias("toks")
     )
 
 
 def chunk_documents(spark: SparkSession, sf_dir: str, size: int = CHUNK_TOKENS) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    return docs.select(
+    return _tokenised(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.posexplode(_windows(toks, size)).alias("chunk_number", "chunk_content"),
+        F.posexplode(_windows("toks", size)).alias("chunk_number", "window"),
     ).select(
         "doc_id",
         "source",
         (F.col("chunk_number") + 1).cast("bigint").alias("chunk_number"),  # 1-based like the reference
-        "chunk_content",
-        F.size(tokens(F.col("chunk_content"))).cast("bigint").alias("chunk_tokens"),
+        F.array_join("window", " ").alias("chunk_content"),
+        F.size("window").cast("bigint").alias("chunk_tokens"),
     )
 
 
@@ -83,13 +91,11 @@ FROM expanded
 
 def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) -> DataFrame:
     """Coarse sections with hierarchy breadcrumbs (source > doc > section)."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    sec = docs.select(
+    sec = _tokenised(spark, sf_dir).select(
         "doc_id",
         "source",
-        F.size(toks).alias("doc_tokens"),
-        F.posexplode(_windows(toks, size)).alias("idx", "section_content"),
+        F.size("toks").alias("doc_tokens"),
+        F.posexplode(_windows("toks", size)).alias("idx", "window"),
     )
     return sec.select(
         "doc_id",
@@ -98,8 +104,8 @@ def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) 
         F.concat(
             F.col("source"), F.lit(" > doc_"), F.col("doc_id"), F.lit(" > sec_"), F.col("idx") + 1
         ).alias("hierarchy"),
-        "section_content",
-        F.size(tokens(F.col("section_content"))).cast("bigint").alias("section_tokens"),
+        F.array_join("window", " ").alias("section_content"),
+        F.size("window").cast("bigint").alias("section_tokens"),
         F.ceil(F.col("doc_tokens") / F.lit(size)).cast("int").alias("n_sections"),
     )
 

@@ -13,10 +13,11 @@ embedding stage issues those calls in bounded batches with retry
 * ``monitor_llm_costs`` — plants a deterministic ``llm_calls`` JSON
   array per event (the house planted-data pattern: synthesized from
   event_id/props so both engines derive identical data with no side
-  file), then runs the real parse path — ``from_json`` to
-  ``array<struct>`` → ``explode`` → per-(stage, model) sums. The JSON
-  round-trip (to_json → from_json) is deliberate: it exercises exactly
-  the JSONB array aggregation the reference performs.
+  file), built directly as an ``array<struct>``, then runs the JSONB
+  array aggregation the reference performs — ``explode`` →
+  per-(stage, model) sums. The plant is not serialized to JSON and
+  parsed back: that round trip is byte-exact on the planted
+  bigints/strings, so it would only add work.
 * ``embed_batch_log`` — assigns every document a deterministic batch id
   (50 docs per API call, stage_04 semantics), builds the per-batch
   call-log rows, and joins the embeddings back to their batch — the
@@ -93,14 +94,9 @@ def llm_cost_rollup(events: DataFrame) -> DataFrame:
     per (stage, model); works on both batch and streaming frames (the
     streaming twin lives in ``streaming/costs.py``).
 
-    The plant is exploded DIRECTLY instead of through the former
-    ``to_json`` → ``from_json`` round-trip (the r10 llm_call_attempts
-    device): the round trip is byte-exact on the planted
-    bigints/strings, so the rows are value-identical, and dropping it
-    removes a JSON serialize+parse of every call from the hot path —
-    production ingest of a real JSONB column is ONE ``from_json``, which
-    this plan still models (the parse happens at the plant boundary,
-    not twice)."""
+    The planted ``array<struct>`` is exploded directly; no JSON is
+    serialized or parsed on this path. Production ingest of a real
+    JSONB column would add one ``from_json`` in front of the explode."""
     calls = events.select(
         F.col("event_type").alias("stage_name"),
         F.explode(_planted_calls()).alias("call"),
@@ -1044,7 +1040,7 @@ ORACLES["props_schema_drift"] = PROPS_DRIFT_SQL
 # monitor_llm_costs is NOT reused); projection = mtd + (mtd div
 # days-elapsed) x days-remaining, all truncating integer arithmetic.
 #
-# Plan: the same from_json -> explode the rollup rides, with the day
+# Plan: the same explode the rollup rides, with the day
 # carried; one (stage, day) agg then a bounded per-stage agg.
 
 MONTH_DAYS = 31  # the planted stream lives in January

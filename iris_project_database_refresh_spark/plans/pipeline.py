@@ -1,29 +1,57 @@
 """End-to-end refresh pipeline + stage monitoring.
 
-`run_refresh` chains the reference's full cycle in one call —
-delta detect → structure (sections/chunks) → embed → merge catalog →
-validate → export — writing each stage's output as parquet, with a
-process-monitor log in the exact spirit of the reference's
-`process_monitor_logs` table (`database-schema.sql:258-280`: run_uuid,
-stage_name, start/end, duration_ms, status, decision_details).
+`run_refresh` chains the reference's full cycle in one call and writes
+each stage's output as parquet under ``out_dir``. As in the reference,
+whose stages hand files to each other (stage1's delta feeds the stage4
+merge, the stage4 master feeds the stage5 validation and manifest),
+every stage reads what its upstream wrote instead of re-deriving it:
 
-Each stage is a lazy DataFrame plan; the only actions are the stage
-writes, so Catalyst optimizes within stages and nothing is collected
-to the driver. At cluster scale the same code runs unchanged — outputs
-become table locations and the monitor log lands in the warehouse.
+    documents ─┬─ delta_detection ──── delta ── catalog_merge ── master ── validation
+               ├─ section_processing ─ sections                    │           │
+               ├─ content_chunking ─── chunks ─────────────────────┴─ manifest ┘
+               └─ embedding_generation ─ embeddings
+
+The four document stages scan ``documents``; the merge also rebuilds
+the master-catalog stand-in from it (`operators/catalog._master`).
+Each stage is one lazy plan run by its write, and the stage's row count
+is an `Observation` on that write, so no stage is read back to be
+counted. The manifest's record counts come from the hash aggregates it
+runs anyway, and its source list from the validation output (one row
+per document_source).
+
+A process-monitor log in the spirit of the reference's
+`process_monitor_logs` table (`database-schema.sql:258-280`: run_uuid,
+stage_name, start/end, duration_ms, status, decision_details) is
+written whether or not the stages succeed, so a failed cycle leaves its
+`Failure` row on disk. The manifest is written last, only after every
+stage has succeeded: its presence marks a completed cycle.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..operators import catalog, chunking, embeddings
-from ..sinks.csv_export import export_chunks_csv  # noqa: F401  (re-export for users)
 from ..sinks.deployment import generate_deployment_metadata, write_deployment_metadata
+
+
+MONITOR_SCHEMA = pa.schema(
+    [
+        ("run_uuid", pa.string()),
+        ("model_name", pa.string()),
+        ("stage_name", pa.string()),
+        ("duration_ms", pa.int64()),
+        ("status", pa.string()),
+        ("decision_details", pa.string()),
+    ]
+)
 
 
 class StageMonitor:
@@ -57,11 +85,10 @@ class StageMonitor:
             )
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            self.rows,
-            "run_uuid string, model_name string, stage_name string, "
-            "duration_ms long, status string, decision_details string",
-        )
+        # From an Arrow table the rows are decoded in the JVM; a list of
+        # tuples would start a Python worker to unpickle six rows.
+        table = pa.Table.from_pylist([dict(zip(MONITOR_SCHEMA.names, r)) for r in self.rows], MONITOR_SCHEMA)
+        return spark.createDataFrame(table)
 
 
 def run_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
@@ -69,24 +96,35 @@ def run_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int
     mon = StageMonitor()
     counts: dict[str, int] = {}
 
-    def write(name: str, df: DataFrame) -> None:
+    def write(name: str, build) -> DataFrame:
+        """Write ``build()`` to ``out_dir/name``, count its rows on the
+        way, and return the written output for the downstream stages."""
+        df = build()
+        obs = Observation(name)
         path = os.path.join(out_dir, name)
-        df.write.mode("overwrite").parquet(path)
-        counts[name] = spark.read.parquet(path).count()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+        counts[name] = obs.get["rows"]
+        return spark.read.schema(df.schema).parquet(path)
 
-    mon.run("delta_detection", write, "delta", catalog.catalog_delta(spark, sf_dir))
-    mon.run("section_processing", write, "sections", chunking.section_split(spark, sf_dir))
-    mon.run("content_chunking", write, "chunks", chunking.chunk_documents(spark, sf_dir))
-    mon.run("embedding_generation", write, "embeddings", embeddings.embed_feature_hash(spark, sf_dir))
-    mon.run("catalog_merge", write, "master", catalog.catalog_merge(spark, sf_dir))
-    mon.run("validation", write, "validation", catalog.catalog_validate(spark, sf_dir))
-    mon.run("monitor_flush", write, "monitor_logs", mon.to_df(spark))
+    # A manifest left by an earlier cycle would mark this one complete.
+    for stale in glob.glob(os.path.join(out_dir, "deployment_metadata_*.json")):
+        os.remove(stale)
+    try:
+        delta = mon.run("delta_detection", write, "delta", lambda: catalog.catalog_delta(spark, sf_dir))
+        mon.run("section_processing", write, "sections", lambda: chunking.section_split(spark, sf_dir))
+        chunks = mon.run("content_chunking", write, "chunks", lambda: chunking.chunk_documents(spark, sf_dir))
+        mon.run("embedding_generation", write, "embeddings", lambda: embeddings.embed_feature_hash(spark, sf_dir))
+        master = mon.run("catalog_merge", write, "master", lambda: catalog.merge_from_delta(spark, sf_dir, delta))
+        validation = mon.run("validation", write, "validation", lambda: catalog.validate_master(master))
+    finally:
+        mon.run("monitor_flush", write, "monitor_logs", lambda: mon.to_df(spark).coalesce(1))
 
     # IT-handoff manifest next to the stage outputs
     # (`stage5_output_final_csv.py:431` generate_deployment_metadata).
     meta = generate_deployment_metadata(
-        spark.read.parquet(os.path.join(out_dir, "master")),
-        spark.read.parquet(os.path.join(out_dir, "chunks")),
+        master,
+        chunks,
+        sources_included=sorted(r.document_source for r in validation.select("document_source").collect()),
         catalog_file="master",
         content_file="chunks",
     )

@@ -10,9 +10,10 @@ statement. This module produces the same manifest from DataFrames.
 
 Scale notes
 -----------
-* Record counts and the content hash are computed distributed —
-  ``count()`` and a commutative xor/sum over per-row hashes — so the
-  manifest of a 100 TB export never funnels rows through the driver.
+* Record counts and the content hash are computed distributed, in
+  one aggregate per frame (a row count beside a commutative sum over
+  per-row hashes), so the manifest of a 100 TB export never funnels
+  rows through the driver.
   (The reference hashes the whole pandas frame in memory;
   order-insensitive hashing is the distributed equivalent.)
 * The manifest itself is kilobytes of driver-side JSON — the one piece
@@ -32,8 +33,9 @@ PIPELINE_VERSION = "spark_refresh_v1.0"
 STAGE_VERSION = "3.0"
 
 
-def dataframe_content_hash(df: DataFrame) -> str:
-    """Order-insensitive 64-bit content hash, computed distributed.
+def content_hash_and_count(df: DataFrame) -> tuple[str, int]:
+    """Order-insensitive 64-bit content hash and row count, in one
+    distributed aggregate.
 
     xxhash64 per row (over every column, stringified) combined with a
     commutative aggregate — the distributed stand-in for the
@@ -50,30 +52,29 @@ def dataframe_content_hash(df: DataFrame) -> str:
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     digest = int(agg["s"] or 0) % (1 << 64)
-    return f"{digest:016x}-{agg['n']}"
+    return f"{digest:016x}-{agg['n']}", agg["n"]
+
+
+def dataframe_content_hash(df: DataFrame) -> str:
+    """The ``<digest>-<rows>`` hash string of `content_hash_and_count`."""
+    return content_hash_and_count(df)[0]
 
 
 def generate_deployment_metadata(
     catalog_df: DataFrame,
     content_df: DataFrame,
     *,
+    sources_included: list[str],
     timestamp: str | None = None,
-    sources_included: list[str] | None = None,
     catalog_file: str | None = None,
     content_file: str | None = None,
 ) -> dict:
-    """Build the stage5-shaped manifest dict for a catalog+content export."""
+    """Build the stage5-shaped manifest dict for a catalog+content export
+    of ``sources_included``. Each frame is scanned once, by the hash
+    aggregate that also gives its record count."""
     ts = timestamp or datetime.now(timezone.utc).strftime("%Y%m%d_%H%M%S")
-    if sources_included is None:
-        src_col = next(
-            (c for c in ("document_source", "source") if c in catalog_df.columns), None
-        )
-        if src_col:
-            sources_included = sorted(
-                r[0] for r in catalog_df.select(src_col).distinct().collect()
-            )
-        else:
-            sources_included = []
+    catalog_hash, catalog_records = content_hash_and_count(catalog_df)
+    content_hash, content_records = content_hash_and_count(content_df)
     source_list = ", ".join(f"'{s}'" for s in sources_included)
     delete_query = (
         f"DELETE FROM apg_catalog WHERE document_source IN ({source_list}); "
@@ -89,10 +90,10 @@ def generate_deployment_metadata(
         "file_info": {
             "catalog_file": catalog_file or f"catalog_{ts}.csv",
             "content_file": content_file or f"content_{ts}.csv",
-            "catalog_records": catalog_df.count(),
-            "content_records": content_df.count(),
-            "catalog_hash": dataframe_content_hash(catalog_df),
-            "content_hash": dataframe_content_hash(content_df),
+            "catalog_records": catalog_records,
+            "content_records": content_records,
+            "catalog_hash": catalog_hash,
+            "content_hash": content_hash,
         },
         "schema_info": {
             "catalog_columns": list(catalog_df.columns),

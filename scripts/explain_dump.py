@@ -3,8 +3,8 @@
 Usage: python scripts/explain_dump.py TAG name [name ...]
 
 Writes ``plans/r11/<name>_<TAG>.txt`` (TAG is e.g. ``before`` /
-``after``) — the optimization-round evidence convention: the judge
-checks plan claims in OPTIMIZATION_r10.md against these files. Plans
+``after``) — the optimization-round evidence convention: plan claims
+in OPTIMIZATION_r11.md are checked against these files. Plans
 are captured at sf0.01 (plan SHAPE is scale-invariant; AQE runtime
 specializations are not captured either way because explain() prints
 the initial plan).

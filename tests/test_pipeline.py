@@ -1,8 +1,14 @@
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import glob
+import json
 
+import pyspark.sql.functions as F
+import pytest
+
+from iris_project_database_refresh_spark.operators import catalog, chunking, embeddings
 from iris_project_database_refresh_spark.plans.pipeline import run_refresh
+from iris_project_database_refresh_spark.sinks.deployment import dataframe_content_hash
 from iris_project_database_refresh_spark.sources.formats import (
     read_csv,
     read_jsonl,
@@ -14,9 +20,24 @@ from iris_project_database_refresh_spark.sources.tables import load_table
 from .conftest import SF_CORRECT
 
 
-def test_full_refresh_pipeline(spark, tmp_path):
-    out = str(tmp_path / "refresh")
-    counts = run_refresh(spark, SF_CORRECT, out)
+STAGES = {
+    "delta_detection",
+    "section_processing",
+    "content_chunking",
+    "embedding_generation",
+    "catalog_merge",
+    "validation",
+}
+
+
+@pytest.fixture(scope="module")
+def refreshed(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("refresh") / "out")
+    return out, run_refresh(spark, SF_CORRECT, out)
+
+
+def test_full_refresh_pipeline(spark, refreshed):
+    out, counts = refreshed
     assert counts["delta"] == 530
     assert counts["master"] == 500
     assert counts["chunks"] > 500
@@ -24,22 +45,15 @@ def test_full_refresh_pipeline(spark, tmp_path):
     # monitor log: one Success row per stage before the flush
     logs = spark.read.parquet(out + "/monitor_logs")
     rows = logs.collect()
-    assert {r.stage_name for r in rows} == {
-        "delta_detection",
-        "section_processing",
-        "content_chunking",
-        "embedding_generation",
-        "catalog_merge",
-        "validation",
-    }
+    assert {r.stage_name for r in rows} == STAGES
     assert all(r.status == "Success" and r.duration_ms >= 0 for r in rows)
     assert len({r.run_uuid for r in rows}) == 1
 
+    # the monitor log is one file
+    assert len(glob.glob(out + "/monitor_logs/*.parquet")) == 1
+
     # deployment manifest: written next to the outputs, counts/schema
     # match the data it describes, delete statement covers every source
-    import glob
-    import json
-
     manifests = glob.glob(out + "/deployment_metadata_*.json")
     assert len(manifests) == 1
     meta = json.load(open(manifests[0]))
@@ -51,16 +65,76 @@ def test_full_refresh_pipeline(spark, tmp_path):
     assert meta["schema_info"]["content_columns"] == chunks.columns
     assert meta["file_info"]["stage_outputs"] == counts
     srcs = meta["deployment_info"]["document_sources"]
+    assert srcs == sorted(r.document_source for r in master.select("document_source").distinct().collect())
     for s in srcs:
         assert f"'{s}'" in meta["instructions"]["delete_query"]
     # hash is content-determined: recomputing over the written parquet agrees
-    from iris_project_database_refresh_spark.sinks.deployment import (
-        dataframe_content_hash,
-    )
-
     assert meta["file_info"]["catalog_hash"] == dataframe_content_hash(master)
     # and order-insensitive: a shuffled frame hashes identically
     assert dataframe_content_hash(master.orderBy(F.rand(7))) == meta["file_info"]["catalog_hash"]
+
+
+@pytest.mark.parametrize(
+    "output, registry_fn",
+    [
+        ("delta", catalog.catalog_delta),
+        ("sections", chunking.section_split),
+        ("chunks", chunking.chunk_documents),
+        ("embeddings", embeddings.embed_feature_hash),
+        ("master", catalog.catalog_merge),
+        ("validation", catalog.catalog_validate),
+    ],
+)
+def test_refresh_outputs_match_registry(spark, refreshed, output, registry_fn):
+    """Each stage reads its upstream's written output; what it writes
+    must equal the registry query that derives it from the documents."""
+    out, _ = refreshed
+    written = spark.read.parquet(f"{out}/{output}")
+    assert dataframe_content_hash(written) == dataframe_content_hash(registry_fn(spark, SF_CORRECT))
+
+
+def test_failed_stage_leaves_failure_record(spark, tmp_path, monkeypatch):
+    out = str(tmp_path / "refresh")
+    # a manifest from an earlier, completed cycle must not survive
+    run_refresh(spark, SF_CORRECT, out)
+    assert len(glob.glob(out + "/deployment_metadata_*.json")) == 1
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("chunker exploded")
+
+    monkeypatch.setattr(chunking, "chunk_documents", boom)
+    with pytest.raises(RuntimeError, match="chunker exploded"):
+        run_refresh(spark, SF_CORRECT, out)
+
+    rows = {r.stage_name: r for r in spark.read.parquet(out + "/monitor_logs").collect()}
+    assert set(rows) == {"delta_detection", "section_processing", "content_chunking"}
+    assert rows["content_chunking"].status == "Failure"
+    assert "chunker exploded" in rows["content_chunking"].decision_details
+    assert rows["delta_detection"].status == rows["section_processing"].status == "Success"
+    assert glob.glob(out + "/deployment_metadata_*.json") == []
+
+
+def test_refresh_of_empty_corpus(spark, tmp_path):
+    sf = str(tmp_path / "sf")
+    load_table(spark, SF_CORRECT, "documents").limit(0).write.parquet(sf + "/documents.parquet")
+    out = str(tmp_path / "refresh")
+    counts = run_refresh(spark, sf, out)
+    assert counts == {
+        "delta": 0,
+        "sections": 0,
+        "chunks": 0,
+        "embeddings": 0,
+        "master": 0,
+        "validation": 0,
+        "monitor_logs": 6,
+    }
+    logs = spark.read.parquet(out + "/monitor_logs").collect()
+    assert {r.stage_name for r in logs} == STAGES
+    assert all(r.status == "Success" for r in logs)
+    (manifest,) = glob.glob(out + "/deployment_metadata_*.json")
+    info = json.load(open(manifest))
+    assert info["file_info"]["catalog_records"] == info["file_info"]["content_records"] == 0
+    assert info["deployment_info"]["document_sources"] == []
 
 
 def test_csv_json_roundtrip(spark, tmp_path):

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from iris_project_database_refresh_spark.operators import chunking, textqc
@@ -39,6 +41,15 @@ def test_chunks_cover_all_tokens(spark):
 def test_chunking_has_no_shuffle(spark):
     plan = chunking.chunk_documents(spark, SF_CORRECT)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+
+
+@pytest.mark.parametrize("op", [chunking.section_split, chunking.chunk_documents])
+def test_chunking_tokenises_text_once(spark, op):
+    """The tokens are projected as a column before the window lambda;
+    if the optimizer inlined the tokeniser back into the lambda, every
+    window would re-split the whole document."""
+    plan = op(spark, SF_CORRECT)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"split\(text#", plan)) == 1, plan
 
 
 def test_lang_confusion_consistency(spark):
