@@ -6,10 +6,10 @@ The naive Spark translation — row_number() over a global Window — pulls
 every row through ONE task. This version keeps the exact same output
 while staying parallel:
 
-1. range-repartition by the sort key (distributed sort),
-2. count rows per partition (a tiny job),
-3. broadcast the cumulative offsets,
-4. number rows locally within each partition.
+1. range-repartition by the sort key (distributed sort), number rows
+   locally within each partition and pin the result,
+2. count rows per partition of the pinned rows (a tiny job),
+3. broadcast the cumulative offsets and add them to the local numbers.
 
 `salted_agg`: two-phase aggregation for skewed group keys — partial
 aggregate on (key, salt), then final aggregate on key. AQE's skew
@@ -40,15 +40,31 @@ def sequential_ids(
     determinism, as catalog_merge does with file_name).
 
     `start_col` names a (constant) column holding the first id — pass
-    it (e.g. cross-joined from a broadcast 1-row aggregate) to keep the
-    whole plan lazy instead of collecting a scalar on the driver.
+    it (e.g. cross-joined from a broadcast 1-row aggregate) instead of
+    collecting a scalar on the driver. The range shuffle runs when this
+    is called (the pinned exchange below); the numbering stays lazy.
     """
-    parts = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    ranged = df.repartitionByRange(int(parts), F.col(order_col))
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id())
+    # One range exchange feeds both the offsets and the numbering: the
+    # pin keeps column pruning from giving the offsets branch its own
+    # exchange, whose separately sampled bounds would not match the
+    # rows numbered here. Within a partition, the record number of
+    # monotonically_increasing_id (its low 33 bits) is the local rank.
+    # Without a fixed partition count, AQE coalesces the exchange, so a
+    # few dozen rows stay one partition (and one output file).
+    mid = F.monotonically_increasing_id()
+    ranged = (
+        df.repartitionByRange(*([num_partitions] if num_partitions else []), F.col(order_col))
+        .sortWithinPartitions(order_col)
+        .select(
+            "*",
+            F.spark_partition_id().alias("_pid"),
+            (mid.bitwiseAND((1 << 33) - 1) + 1).alias("_rn"),
+        )
+        .localCheckpoint(eager=False)
+    )
     # tiny: one row per partition
     offsets = (
-        with_pid.groupBy("_pid")
+        ranged.groupBy("_pid")
         .agg(F.count(F.lit(1)).alias("_n"))
         .withColumn(
             "_offset",
@@ -61,12 +77,11 @@ def sequential_ids(
         )
         .select("_pid", "_offset")
     )
-    w_local = Window.partitionBy("_pid").orderBy(order_col)
     base = (F.col(start_col) - 1) if start_col else F.lit(start - 1)
     out = (
-        with_pid.join(F.broadcast(offsets), "_pid")
-        .withColumn(id_col, F.row_number().over(w_local) + F.col("_offset") + base)
-        .drop("_pid", "_offset")
+        ranged.join(F.broadcast(offsets), "_pid")
+        .withColumn(id_col, F.col("_rn") + F.col("_offset") + base)
+        .drop("_pid", "_rn", "_offset")
     )
     return out.drop(start_col) if start_col else out
 

@@ -29,7 +29,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
-def unit_rows_np(m, what: str = "vectors"):
+def unit_rows_np(m, what: str = "vectors", ids=None):
     """Row-unit-normalize a 2-D numpy array, REFUSING zero-norm rows.
 
     The Arrow cosine kernels assign cells/links via argmax over rounded
@@ -38,14 +38,17 @@ def unit_rows_np(m, what: str = "vectors"):
     from the engine/oracle expression paths (which produce NaN cosines
     with their own ordering). No corpus contains zero vectors, so the
     honest contract is to fail loudly instead of silently mis-assigning
-    (round-10 ADVICE item).
+    (round-10 ADVICE item). ``ids`` (one per row) puts the offending
+    rows' ids in the error.
     """
     import numpy as np
 
     norms = np.sqrt((m * m).sum(axis=1, keepdims=True))
-    if (norms == 0.0).any():
+    zero = norms[:, 0] == 0.0
+    if zero.any():
+        named = f" (ids {[int(i) for i in np.asarray(ids)[zero]]})" if ids is not None else ""
         raise ValueError(
             f"zero-norm {what} row(s) in cosine kernel: "
-            f"{int((norms == 0.0).sum())} of {m.shape[0]}"
+            f"{int(zero.sum())} of {m.shape[0]}{named}"
         )
     return m / norms

@@ -46,6 +46,23 @@ def _cos(a, b):
     return F.round(_dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b))), 6)
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """Spark-SQL text of `_dot` over columns ``a`` and ``b`` — the
+    identical analyzed expression (same zip_with/aggregate fold, same
+    double-typed zero), built by one parser call instead of dozens of
+    py4j Column-algebra round-trips. Callers hoist one-sided norms
+    (``sqrt(_dot_sql(a, a))``) to the side of a join that owns them."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        " cast(0.0 as double), (acc, x) -> acc + x)"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """Spark-SQL text of `_cos`: same fold, same 6dp round."""
+    return f"round({_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)})), 6)"
+
+
 def _ivf_scored_arrow(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """(vec_id, cell, ccos, best) for every vector against the IVF
     codebook, as ONE Arrow pass over the collected centroids (guide

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .advanced import CENTROID_BASE, _as_double, _cos
+from .advanced import CENTROID_BASE, _as_double, _cos, _cos_sql, _dot_sql
 
 M = 8  # subspaces
 SUBD = 8  # dims per subspace (M * SUBD = 64 = embedding dim)
@@ -1526,33 +1526,9 @@ ORACLES["hnsw_build_links"] = HNSW_LINKS_SQL
 HNSW_SEARCH_K = PQ_K
 
 
-def _cos_sql(a: str, b: str) -> str:
-    """Spark-SQL text of `advanced._cos` — the identical analyzed
-    expression (same zip_with/aggregate fold, same double-typed zero,
-    same 6dp round), built by one parser call instead of dozens of
-    py4j Column-algebra round-trips (the r10 descent-driver-time cut)."""
-
-    def dot(x: str, y: str) -> str:
-        return (
-            f"aggregate(zip_with({x}, {y}, (x, y) -> x * y),"
-            " cast(0.0 as double), (acc, x) -> acc + x)"
-        )
-
-    return f"round({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})), 6)"
-
-
 _COS_QCV = _cos_sql("q", "cv")
 _COS_QNV = _cos_sql("q", "nv")
 _COS_CVNV = _cos_sql("cv", "nv")
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """The bare fold `_cos_sql` builds its dots from — factored out so
-    the descent can hoist one-sided norms to the join sides (r11)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-        " cast(0.0 as double), (acc, x) -> acc + x)"
-    )
 
 
 _DOT_QQ = _dot_sql("q", "q")

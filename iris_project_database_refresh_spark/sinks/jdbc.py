@@ -97,8 +97,10 @@ class JdbcUpsertSink:
         rolls back instead of losing target rows. Returns the verify
         payload {'table', 'rows'}.
         """
+        # coalesce, not repartition: the staging INSERTs keep the batch's
+        # own partitioning, capped at num_partitions, without a shuffle.
         (
-            batch.repartition(num_partitions)
+            batch.coalesce(num_partitions)
             .write.mode("overwrite")
             .options(**self.properties)
             .jdbc(self.url, self.staging_table)

@@ -1,4 +1,4 @@
-"""Persisted IVF vector index: build-once, partition-pruned probes.
+"""Persisted IVF vector index: build once, serve probes from the codebook.
 
 The operators in `operators/advanced.py` compute the IVF structure
 in-query; a deployment builds it ONCE per refresh and serves many
@@ -7,17 +7,26 @@ queries from the artifact (what pgvector's ivfflat index is on disk —
 feed). Layout:
 
     index_dir/
-      codebook/            -- NCELLS centroid vectors (tiny parquet)
-      cells/cell=<k>/      -- vectors partitioned by nearest-centroid cell
-      manifest.json        -- ncells, dims, per-cell row counts
+      codebook/            -- NCELLS centroid vectors (cell, cv)
+      cells/cell=<k>/      -- vectors (vec_id, v) partitioned by nearest cell
+      manifest.json        -- ncells, nprobe, per-cell row counts
 
-The serving property this buys at 100 TB: a query probes NPROBE cells,
-and because `cells/` is hive-partitioned on the cell id, the probe
-read PRUNES to those directories at planning time (PartitionFilters —
-asserted in tests). IO per query scales with the probed slice, not the
-corpus. The probed cell list is a driver-side decision over
-NPROBE x queries ids (metadata-scale, like any query planner's
-partition selection).
+Build: one narrow pass scores every vector against the codebook (one
+broadcast row holding all centroids) and keeps the argmax cell, ties to
+the lower cell, as `knn_ivf` does. The manifest's per-cell counts are
+observed on the write of `cells/`, not recomputed.
+
+Search: the codebook (NCELLS rows) is read and validated on the driver
+and scored against the query vectors with `knn_ivf`'s own math
+(`unit_rows_np`, then `np.round(q @ C.T, 6)`, ordered by ccos desc and
+cell asc), so each query's NPROBE probes equal `knn_ivf`'s. Only the
+probed `cells/cell=<k>` directories are scanned — the `cell IN (...)`
+filter prunes them at planning time (PartitionFilters, asserted in
+tests) — and each query meets only its own probed cells through a
+broadcast of (query, probed cell) rows built on the JVM side. Cosines
+are `_cos`'s exact values. IO per search scales with the probed slice,
+not the corpus. Every read uses the schema the build wrote, so no read
+starts a schema-inference job.
 """
 
 from __future__ import annotations
@@ -25,74 +34,132 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.advanced import CENTROID_BASE, IVF_K, IVF_QUERIES, NCELLS, NPROBE, _as_double, _cos
+from ..operators.advanced import CENTROID_BASE, IVF_K, IVF_QUERIES, NCELLS, NPROBE, _as_double, _cos, _dot_sql
 from ..sources.tables import load_table
 
+CODEBOOK_SCHEMA = "cell bigint, cv array<double>"
+CELLS_SCHEMA = "vec_id bigint, v array<double>, cell bigint"
 
-def _assigned(spark: SparkSession, sf_dir: str):
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    cents = emb.where(
-        (F.col("vec_id") >= CENTROID_BASE) & (F.col("vec_id") < CENTROID_BASE + NCELLS)
-    ).select(F.col("vec_id").alias("cell"), F.col("v").alias("cv"))
-    scored = emb.join(F.broadcast(cents), how="cross").select(
-        "vec_id", "v", "cell", _cos(F.col("v"), F.col("cv")).alias("ccos")
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    return scored.withColumn("r", F.row_number().over(w)), cents
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def _cos_normed_sql(a: str, b: str, a_norm: str, b_norm: str) -> str:
+    """`_cos` given both norms as columns: the same arithmetic, so the
+    same rounded cosine, at one dot product per pair instead of three."""
+    return f"round({_dot_sql(a, b)} / ({a_norm} * {b_norm}), 6)"
+
+
+def _read_codebook(index_dir: str):
+    """(cell ids, unit centroid matrix) sorted by cell, read and checked on
+    the driver: a zero-norm centroid raises a ValueError naming its cell."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from ..functions.vectors import unit_rows_np
+
+    book = pq.read_table(os.path.join(index_dir, "codebook")).sort_by("cell")
+    cells = book.column("cell").to_numpy()
+    cv = book.column("cv").combine_chunks()
+    cm = cv.flatten().to_numpy().reshape(len(cells), -1).astype(np.float64)
+    return cells, unit_rows_np(cm, "codebook", ids=cells)
 
 
 def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> dict:
     """Assign every vector to its nearest codebook cell and persist the
     partitioned layout + codebook + manifest. Returns the manifest."""
-    scored, cents = _assigned(spark, sf_dir)
-    assigned = scored.where(F.col("r") == 1).select("vec_id", "v", "cell")
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    book_dir = os.path.join(index_dir, "codebook")
+    emb.where(
+        (F.col("vec_id") >= CENTROID_BASE) & (F.col("vec_id") < CENTROID_BASE + NCELLS)
+    ).select(F.col("vec_id").alias("cell"), F.col("v").alias("cv")).write.mode(
+        "overwrite"
+    ).parquet(book_dir)
+    cells, _ = _read_codebook(index_dir)
+
+    book = spark.read.schema(CODEBOOK_SCHEMA).parquet(book_dir).selectExpr(
+        f"collect_list(struct(cell, cv, {_norm_sql('cv')} AS cn)) AS book"
+    )
+    # argmax of (ccos, -cell): the highest cosine, ties to the lower cell
+    best_cell = (
+        "-array_max(transform(book, c -> named_struct("
+        f"'ccos', {_cos_normed_sql('v', 'c.cv', 'vn', 'c.cn')}, 'neg_cell', -c.cell))).neg_cell"
+    )
+    assigned = (
+        emb.selectExpr("vec_id", "v", f"{_norm_sql('v')} AS vn")
+        .crossJoin(F.broadcast(book))
+        .selectExpr("vec_id", "v", f"{best_cell} AS cell")
+    )
+    obs = Observation("ivf_cell_rows")
     (
         assigned.repartition("cell")
+        .observe(obs, *[F.count_if(F.col("cell") == int(c)).alias(str(c)) for c in cells])
         .write.partitionBy("cell")
         .mode("overwrite")
         .parquet(os.path.join(index_dir, "cells"))
     )
-    cents.write.mode("overwrite").parquet(os.path.join(index_dir, "codebook"))
-    counts = {
-        str(r["cell"]): r["n"]
-        for r in assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+    counts = {c: n for c, n in obs.get.items() if n}
     manifest = {"ncells": NCELLS, "nprobe": NPROBE, "cell_rows": counts}
     with open(os.path.join(index_dir, "manifest.json"), "w") as f:
         json.dump(manifest, f, indent=1, sort_keys=True)
     return manifest
 
 
-def query_ivf_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFrame:
-    """Serve the standard IVF query set from the persisted index; the
-    cells scan is partition-pruned to the probed cells only."""
-    scored, _cents = _assigned(spark, sf_dir)
-    probes = (
-        scored.where(F.col("vec_id") < IVF_QUERIES)
-        .where(F.col("r") <= NPROBE)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("q"), "cell")
+def search_ivf_index(spark: SparkSession, index_dir: str, queries: DataFrame) -> DataFrame:
+    """Top-IVF_K neighbours of each query vector from the persisted index.
+
+    ``queries`` has columns ``query_id`` (bigint) and ``q`` (array of
+    numbers). Query ids share the corpus id space: a query that is itself
+    a corpus vector is not returned as its own neighbour. The query
+    vectors are collected once to choose the probes; they are re-read on
+    the JVM side for the rerank, never rebuilt from Python. Zero-norm
+    vectors, a wrong dimension or duplicate query ids raise a ValueError
+    before the index is scanned. Output: (query_id,
+    neighbor_id, rank, cosine)."""
+    import numpy as np
+
+    from ..functions.vectors import unit_rows_np
+
+    with open(os.path.join(index_dir, "manifest.json")) as f:
+        nprobe = json.load(f)["nprobe"]
+    cells, cm = _read_codebook(index_dir)
+    rows = queries.select("query_id", "q").collect()  # the query set: few rows
+    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    if len(np.unique(qids)) != len(qids):
+        raise ValueError("duplicate query ids in the query set")
+    # a query of the wrong dimension fails this reshape
+    qm = np.array([r["q"] for r in rows], dtype=np.float64).reshape(len(rows), cm.shape[1])
+    ccos = np.round(unit_rows_np(qm, "query", ids=qids) @ cm.T, 6)
+    probes = {
+        int(qid): cells[np.lexsort((cells, -row))[:nprobe]].tolist()
+        for qid, row in zip(qids, ccos)
+    }
+
+    probed = sorted({c for cs in probes.values() for c in cs})
+    index = (
+        spark.read.schema(CELLS_SCHEMA)
+        .parquet(os.path.join(index_dir, "cells"))
+        .where(F.col("cell").isin(probed))  # planning-time partition pruning
     )
-    probe_rows = probes.select("query_id", "cell").collect()  # metadata-scale
-    probed_cells = sorted({r["cell"] for r in probe_rows})
-    cells = spark.read.parquet(os.path.join(index_dir, "cells")).where(
-        F.col("cell").isin(probed_cells)  # planning-time partition pruning
+    # each query's probed cells: a literal map, looked up per query row
+    entries = ", ".join(f"{qid}L, array({', '.join(f'{c}L' for c in cs)})" for qid, cs in probes.items())
+    probe_cells = f"element_at(map({entries}), query_id)" if probes else "cast(array() AS array<bigint>)"
+    pairs = queries.selectExpr(
+        "query_id", "q", f"{_norm_sql('q')} AS qn", f"explode({probe_cells}) AS cell"
     )
     cand = (
-        cells.join(
-            F.broadcast(probes),
-            (cells.cell == probes.cell) & (cells.vec_id != probes.query_id),
+        index.selectExpr("vec_id", "v", "cell", f"{_norm_sql('v')} AS vn")
+        .join(F.broadcast(pairs), "cell")
+        .where("vec_id != query_id")
+        .selectExpr(
+            "query_id", "vec_id AS neighbor_id", f"{_cos_normed_sql('q', 'v', 'qn', 'vn')} AS cosine"
         )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos(F.col("q"), F.col("v")).alias("cosine"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -100,6 +167,17 @@ def query_ivf_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFra
         .where(F.col("rank") <= IVF_K)
         .select("query_id", "neighbor_id", F.col("rank").cast("bigint").alias("rank"), "cosine")
     )
+
+
+def query_ivf_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFrame:
+    """Serve the standard IVF query set (vec_id < IVF_QUERIES) from the
+    persisted index; rows equal `knn_ivf`'s."""
+    queries = (
+        load_table(spark, sf_dir, "embeddings")
+        .where(F.col("vec_id") < IVF_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("q"))
+    )
+    return search_ivf_index(spark, index_dir, queries)
 
 
 # --- Persisted HNSW index ------------------------------------------------------

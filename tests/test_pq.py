@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -95,6 +96,137 @@ def test_persisted_ivf_index_serves_identically(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1), f"cells scan not partition-pruned: {plan[:400]}"
+
+
+@pytest.fixture(scope="module")
+def ivf_index(spark, tmp_path_factory):
+    from iris_project_database_refresh_spark.sinks.vector_index import build_ivf_index
+
+    d = str(tmp_path_factory.mktemp("ivf_index"))
+    build_ivf_index(spark, SF_CORRECT, d)
+    return d
+
+
+@contextmanager
+def _job_group(spark, name):
+    """Yields a list that holds, on exit, the ids of the Spark jobs run
+    inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are delivered async
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(name))
+
+
+def _local_queries(spark, qids, vecs):
+    """A (query_id, q) DataFrame held in the plan itself (an inline
+    table), so collecting it starts no Spark job."""
+    values = ", ".join(
+        f"({int(i)}L, array({', '.join(f'{float(x)!r}D' for x in v)}))" for i, v in zip(qids, vecs)
+    )
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t(query_id, q)")
+
+
+def _corpus():
+    import numpy as np
+    import pyarrow.parquet as papq
+
+    t = papq.read_table(os.path.join(SF_CORRECT, "embeddings.parquet"), columns=["vec_id", "embedding"])
+    return t["vec_id"].to_numpy(), np.array(t["embedding"].to_pylist(), dtype=np.float64)
+
+
+def test_search_ivf_index_matches_numpy_within_probes(spark, ivf_index):
+    """Queries that are not corpus rows (seeded perturbations of corpus
+    vectors) get the numpy brute force over each query's NPROBE nearest
+    cells: the same neighbours in the same ranks, cosines within 1e-6.
+    The manifest's per-cell counts equal the numpy cell assignment."""
+    import json
+
+    import numpy as np
+
+    from iris_project_database_refresh_spark.operators.advanced import CENTROID_BASE, IVF_K, NCELLS, NPROBE
+    from iris_project_database_refresh_spark.sinks.vector_index import search_ivf_index
+
+    ids, vecs = _corpus()
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    cell_ids = np.arange(CENTROID_BASE, CENTROID_BASE + NCELLS)
+    cents = unit[np.searchsorted(ids, cell_ids)]
+    cell_of = cell_ids[np.argmax(np.round(unit @ cents.T, 6), axis=1)]
+    with open(os.path.join(ivf_index, "manifest.json")) as f:
+        manifest = json.load(f)
+    cells, n = np.unique(cell_of, return_counts=True)
+    assert manifest["cell_rows"] == {str(c): int(k) for c, k in zip(cells, n)}
+
+    rng = np.random.default_rng(11)
+    qv = vecs[rng.choice(len(ids), size=6, replace=False)]
+    qv = qv + rng.normal(scale=0.5 * vecs.std(), size=qv.shape)
+    qids = np.arange(10_000, 10_000 + len(qv))
+    got: dict[int, list] = {}
+    for r in search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv)).collect():
+        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
+    assert sorted(got) == qids.tolist()
+    assert search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv).limit(0)).collect() == []
+    for qid, q in zip(qids, qv):
+        qu = q / np.linalg.norm(q)
+        probes = cell_ids[np.lexsort((cell_ids, -np.round(cents @ qu, 6)))[:NPROBE]]
+        cand = np.flatnonzero(np.isin(cell_of, probes))
+        cos = unit[cand] @ qu
+        top = np.lexsort((ids[cand], -np.round(cos, 6)))[:IVF_K]
+        rows = sorted(got[qid])
+        assert [k for k, _, _ in rows] == list(range(1, len(top) + 1))
+        assert [n for _, n, _ in rows] == ids[cand][top].tolist()
+        assert np.abs(np.array([c for _, _, c in rows]) - cos[top]).max() <= 1e-6
+
+
+def test_query_ivf_index_runs_at_most_five_jobs(spark, ivf_index):
+    """A search probes and reranks; it does not re-score the corpus
+    against the codebook. Its jobs: the embeddings schema read, the
+    query collect, the probe broadcast, the rank shuffle and the result."""
+    from iris_project_database_refresh_spark.sinks.vector_index import query_ivf_index
+
+    with _job_group(spark, "ivf-query-jobs") as jobs:
+        rows = query_ivf_index(spark, ivf_index, SF_CORRECT).collect()
+    assert rows
+    assert 0 < len(jobs) <= 5, jobs
+
+
+def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, tmp_path):
+    """A zero-norm query vector or codebook row raises a ValueError that
+    names its id, on the driver, before any Spark job runs; so does a
+    query of the wrong dimension."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from iris_project_database_refresh_spark.sinks.vector_index import search_ivf_index
+
+    _, vecs = _corpus()
+    qv = vecs[:2].copy()
+    qv[1] = 0.0
+    with _job_group(spark, "ivf-zero-query") as jobs, pytest.raises(ValueError, match=r"query.*\[7\]"):
+        search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 7], qv))
+    assert jobs == []
+    with _job_group(spark, "ivf-short-query") as jobs, pytest.raises(ValueError):
+        search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 7], vecs[:2, :-1]))
+    assert jobs == []
+
+    bad = tmp_path / "bad_index"
+    shutil.copytree(ivf_index, bad)
+    book = papq.read_table(bad / "codebook")
+    shutil.rmtree(bad / "codebook")
+    (bad / "codebook").mkdir()
+    cv = book.column("cv").to_pylist()
+    cv[book.column("cell").to_pylist().index(105)] = [0.0] * len(cv[0])
+    i = book.schema.get_field_index("cv")
+    papq.write_table(book.set_column(i, "cv", pa.array(cv, book.schema.field(i).type)), bad / "codebook" / "part-0.parquet")
+    with _job_group(spark, "ivf-zero-codebook") as jobs, pytest.raises(ValueError, match=r"codebook.*\[105\]"):
+        search_ivf_index(spark, str(bad), _local_queries(spark, [6], vecs[:1]))
+    assert jobs == []
 
 
 def test_ivf_pq_probed_cells_and_rank_shape(spark):
