@@ -15,7 +15,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from iris_project_database_refresh_spark.plans import ORACLES, QUERIES
+from iris_project_database_refresh_spark.plans.registry import ORACLES, QUERIES
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 FLAGSHIP = "q5_local_supplier"

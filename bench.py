@@ -15,7 +15,7 @@ import re
 import sys
 import time
 
-from iris_project_database_refresh_spark.plans import QUERIES
+from iris_project_database_refresh_spark.plans.registry import QUERIES
 from iris_project_database_refresh_spark.session import get_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

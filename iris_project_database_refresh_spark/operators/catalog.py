@@ -182,9 +182,10 @@ def merge_from_delta(spark: SparkSession, sf_dir: str, delta: DataFrame) -> Data
     # no extra job per invocation).
     next_id = master.agg((F.coalesce(F.max("id"), F.lit(0)) + 1).alias("_start"))
     # distributed sequential numbering — a row_number() over a global
-    # Window would drag the whole incoming batch through one task; the
-    # two-pass range-partition + offset join keeps the identical ids
-    # while staying parallel (functions/distributed.sequential_ids).
+    # Window would drag the whole incoming batch through one task;
+    # functions/distributed.sequential_ids numbers one pinned range
+    # exchange and adds broadcast per-partition offsets: identical ids,
+    # every stage parallel.
     from ..functions.distributed import sequential_ids
 
     incoming = sequential_ids(
@@ -720,8 +721,9 @@ ORACLES["catalog_path_stats"] = CATALOG_PATH_SQL
 def catalog_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the merged master (narrow 2-column projection): the audit
     # references it three times (missing / extra / stats) and each
-    # unpinned reference re-derives the full merge pipeline — the
-    # full-outer delta join plus sequential_ids' two-pass numbering.
+    # unpinned reference re-derives the merge — the full-outer delta
+    # join behind the survivors plus sequential_ids' offset join (its
+    # range exchange is pinned inside sequential_ids and runs once).
     # _snapshot stays unpinned: it is a single projected scan, where a
     # pin measures slower than Spark's own exchange reuse.
     merged = (

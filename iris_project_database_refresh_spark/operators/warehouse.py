@@ -200,14 +200,12 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_spend"),
         )
-        # pin: each chained two-pass ntile references its input twice
-        # (offsets + main), so three chained passes would otherwise
-        # replicate the orders aggregation subtree up to 8x
+        # pin: the three ntile branches and the join-back all read this
+        # table, so unpinned each would re-run the orders aggregation
         .localCheckpoint(eager=False)
     )
     # three INDEPENDENT branches off the pinned customer table, joined
-    # back on custkey — branches schedule concurrently (a chained
-    # version serializes the three range shuffles; measured 2x slower)
+    # back on custkey
     scored = per_cust
     for tile, key in (
         ("r_score", "last_order"),

@@ -23,7 +23,7 @@ OUT = os.path.join(os.path.dirname(__file__), "..", "plans", "r11")
 
 def main() -> int:
     tag, names = sys.argv[1], sys.argv[2:]
-    from iris_project_database_refresh_spark.plans import QUERIES
+    from iris_project_database_refresh_spark.plans.registry import QUERIES
     from iris_project_database_refresh_spark.session import get_session
 
     spark = get_session("explain-dump")

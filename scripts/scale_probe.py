@@ -67,7 +67,7 @@ def build_corpus() -> None:
 
 def main(names: list[str]) -> int:
     build_corpus()
-    from iris_project_database_refresh_spark.plans import QUERIES
+    from iris_project_database_refresh_spark.plans.registry import QUERIES
     from iris_project_database_refresh_spark.session import get_session
 
     spark = get_session("scale-probe")

@@ -22,7 +22,7 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_TIME_REPEATS", "3"))
 
 def main() -> int:
     names = sys.argv[1:]
-    from iris_project_database_refresh_spark.plans import QUERIES
+    from iris_project_database_refresh_spark.plans.registry import QUERIES
     from iris_project_database_refresh_spark.session import get_session
 
     spark = get_session("time-query")

@@ -145,13 +145,17 @@ def test_global_ordered_matches_window_functions(spark):
     """The distributed two-pass devices must be bit-identical to the
     single-task window functions they replace, across asc/desc and
     composite orders, including exact SQL ntile bucket-size semantics
-    (first n % k tiles get one extra row) and k > n."""
+    (first n % k tiles get one extra row) and k > n. The customer input
+    carries a column outside the order key, so the offsets and the rows
+    they number must come from the same range exchange."""
+    import math
     import random
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from iris_project_database_refresh_spark.functions.distributed import (
+        global_cumsum,
         global_ntile,
         global_ordered,
     )
@@ -187,3 +191,35 @@ def test_global_ordered_matches_window_functions(spark):
         .count()
     )
     assert bad == 0
+
+    cust = load_table(spark, SF_CORRECT, "customer").select("c_custkey", "c_name", "c_acctbal")
+    w = Window.orderBy("c_name")
+    want = {
+        r.c_custkey: r
+        for r in cust.select(
+            "c_custkey",
+            F.row_number().over(w).alias("rn"),
+            F.ntile(4).over(w).alias("t"),
+            F.sum("c_acctbal").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cs"),
+            F.coalesce(
+                F.sum("c_acctbal").over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0.0)
+            ).alias("off"),
+        ).collect()
+    }
+    ranked = {
+        r.c_custkey: r
+        for r in global_ordered(
+            cust, ["c_name"], rank_col="rn", cumsum_cols={"cs": "c_acctbal"}
+        ).collect()
+    }
+    tiles = {r.c_custkey: r.t for r in global_ntile(cust, ["c_name"], 4, tile_col="t").collect()}
+    offs = {
+        r.c_custkey: r.off
+        for r in global_cumsum(cust, "c_name", "c_acctbal", out_col="off").collect()
+    }
+    assert len(want) == len(ranked) == len(tiles) == len(offs) == 1500
+    assert {k: r.rn for k, r in ranked.items()} == {k: r.rn for k, r in want.items()}
+    assert tiles == {k: r.t for k, r in want.items()}
+    # double sums: the prefix offsets regroup the additions
+    assert all(math.isclose(ranked[k].cs, r.cs, abs_tol=1e-6) for k, r in want.items())
+    assert all(math.isclose(offs[k], r.off, abs_tol=1e-6) for k, r in want.items())

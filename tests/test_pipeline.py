@@ -178,7 +178,7 @@ def test_registry_is_complete():
     """A broken transitive import must not silently shrink the
     correctness surface: every expected query name is registered and
     every oracle belongs to a registered query."""
-    from iris_project_database_refresh_spark.plans import ORACLES, QUERIES
+    from iris_project_database_refresh_spark.plans.registry import ORACLES, QUERIES
 
     assert len(QUERIES) >= 439, sorted(QUERIES)
     assert set(ORACLES) <= set(QUERIES)

@@ -2,7 +2,7 @@ from __future__ import annotations
 
 import pytest
 
-from iris_project_database_refresh_spark.plans import QUERIES
+from iris_project_database_refresh_spark.plans.registry import QUERIES
 
 from .conftest import SF_CORRECT
 
