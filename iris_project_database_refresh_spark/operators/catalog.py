@@ -14,10 +14,10 @@ Catalyst can optimize instead of pandas merges:
   validate_csv_data: per-source required-field/row-count audit before
   deployment.
 
-The merge and validation bodies (`merge_from_delta`, `validate_master`)
-take their upstream DataFrame, so the refresh pipeline feeds them the
-delta and master it has written; the registry functions derive that
-upstream from `documents`.
+The stage bodies (`delta_from_documents`, `merge_from_delta`,
+`validate_master`) take their upstream DataFrames, so the refresh
+pipeline reads `documents` once and feeds each stage the output it has
+written; the registry functions read `documents` and call the bodies.
 * `refresh_upsert` ⇔ `semantic search/stage_06_database_upload.py:161`
   upload_csv_with_staging: staging-table upsert = delete rows whose key
   appears in the incoming batch, then insert the batch.
@@ -29,11 +29,10 @@ in the DuckDB oracle — the operators see realistic mixed deltas while
 staying value-hash checkable.
 
 Scale: each op is one outer/anti join keyed on file identity — hash
-shuffle on a near-unique key (no skew), no window over the whole table
-except sequential-id assignment, which at 100 TB would become
-monotonically_increasing_id or a zipWithIndex-free reservation range;
-kept as the reference's max+row_number semantics here because ids must
-match the oracle exactly.
+shuffle on a near-unique key (no skew), no window over the whole table.
+Sequential ids keep the reference's max+row_number semantics (ids must
+match the oracle exactly) but are assigned distributed, by
+`functions/distributed.sequential_ids` over one range exchange.
 """
 
 from __future__ import annotations
@@ -46,9 +45,8 @@ from ..sources.tables import load_table
 BASE_TS = "2024-01-01 00:00:00"
 
 
-def _snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _snapshot(docs: DataFrame) -> DataFrame:
     """Filesystem listing stand-in (stage1 get_nas_files output shape)."""
-    docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         F.concat(F.lit("doc_"), F.col("doc_id"), F.lit(".txt")).alias("file_name"),
         F.concat(F.lit("/data/"), F.col("source"), F.lit("/doc_"), F.col("doc_id"), F.lit(".txt")).alias("file_path"),
@@ -58,11 +56,10 @@ def _snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _master(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _master(docs: DataFrame) -> DataFrame:
     """Master catalog stand-in: drops doc_id%11==3 (→ those read as new),
     ages mtime by 5 min for doc_id%13==2 (→ updated), and adds
     catalog-only ghost rows for doc_id%17==0 (→ deleted)."""
-    docs = load_table(spark, sf_dir, "documents")
     current = docs.where(F.col("doc_id") % 11 != 3).select(
         (F.col("doc_id") + 1).alias("id"),
         F.concat(F.lit("doc_"), F.col("doc_id"), F.lit(".txt")).alias("file_name"),
@@ -121,9 +118,11 @@ master AS (
 
 # --- delta detection ---------------------------------------------------------
 
-def catalog_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nas = _snapshot(spark, sf_dir).alias("nas")
-    csv = _master(spark, sf_dir).alias("csv")
+def delta_from_documents(docs: DataFrame, master: DataFrame) -> DataFrame:
+    """Classify every file of the ``docs`` snapshot and of the prior
+    ``master`` (`_master`) as new, updated, deleted or unchanged."""
+    nas = _snapshot(docs).alias("nas")
+    csv = master.alias("csv")
     joined = nas.join(csv, "file_name", "full_outer")
     nas_min = F.date_trunc("minute", F.col("nas.date_last_modified"))
     csv_min = F.date_trunc("minute", F.col("csv.date_last_modified"))
@@ -143,6 +142,11 @@ def catalog_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         action.isin("new", "updated").cast("int").alias("needs_process"),
         action.isin("updated", "deleted").cast("int").alias("needs_delete"),
     )
+
+
+def catalog_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    return delta_from_documents(docs, _master(docs))
 
 
 CATALOG_DELTA_SQL = f"""
@@ -168,12 +172,12 @@ FROM joined
 
 # --- master merge (delete + append with sequential ids) ----------------------
 
-def merge_from_delta(spark: SparkSession, sf_dir: str, delta: DataFrame) -> DataFrame:
-    """Master after one refresh cycle: survivors keep their ids; new and
-    updated files are (re)appended with ids max(id)+1, max(id)+2, …
-    ordered by file_name (stage4 get_next_id semantics). ``delta`` is
-    `catalog_delta`'s output, as computed or as read back once written."""
-    master = _master(spark, sf_dir)
+def merge_from_delta(master: DataFrame, delta: DataFrame) -> DataFrame:
+    """Master after one refresh cycle: survivors of the prior ``master``
+    keep their ids; new and updated files are (re)appended with ids
+    max(id)+1, max(id)+2, … ordered by file_name (stage4 get_next_id
+    semantics). ``delta`` is `delta_from_documents`' output, as computed
+    or as read back once written."""
     survivors = master.join(
         delta.where(F.col("needs_delete") == 1).select("file_name"), "file_name", "left_anti"
     ).select("id", "file_name", "file_path", "file_size", "document_source", F.lit("kept").alias("row_status"))
@@ -202,8 +206,14 @@ def merge_from_delta(spark: SparkSession, sf_dir: str, delta: DataFrame) -> Data
     return survivors.unionAll(incoming)
 
 
+def _merged(docs: DataFrame) -> DataFrame:
+    """One cycle's merged master, derived from ``docs`` alone."""
+    master = _master(docs)
+    return merge_from_delta(master, delta_from_documents(docs, master))
+
+
 def catalog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return merge_from_delta(spark, sf_dir, catalog_delta(spark, sf_dir))
+    return _merged(load_table(spark, sf_dir, "documents"))
 
 
 CATALOG_MERGE_SQL = f"""
@@ -726,12 +736,13 @@ def catalog_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range exchange is pinned inside sequential_ids and runs once).
     # _snapshot stays unpinned: it is a single projected scan, where a
     # pin measures slower than Spark's own exchange reuse.
+    docs = load_table(spark, sf_dir, "documents")
     merged = (
-        catalog_merge(spark, sf_dir)
+        _merged(docs)
         .select("id", "file_name")
         .localCheckpoint(eager=False)
     )
-    snap = _snapshot(spark, sf_dir).select("file_name")
+    snap = _snapshot(docs).select("file_name")
     missing = snap.join(merged, "file_name", "left_anti").agg(
         F.count(F.lit(1)).alias("missing_from_master")
     )

@@ -52,15 +52,14 @@ def _windows(toks: str, size: int) -> Column:
     )
 
 
-def _tokenised(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tokenised(docs: DataFrame) -> DataFrame:
     """documents as (doc_id, source, toks): `text` tokenised once."""
-    return load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", tokens(F.col("text")).alias("toks")
-    )
+    return docs.select("doc_id", "source", tokens(F.col("text")).alias("toks"))
 
 
-def chunk_documents(spark: SparkSession, sf_dir: str, size: int = CHUNK_TOKENS) -> DataFrame:
-    return _tokenised(spark, sf_dir).select(
+def chunks_from_documents(docs: DataFrame, size: int = CHUNK_TOKENS) -> DataFrame:
+    """Token windows of ``size`` per document of ``docs``."""
+    return _tokenised(docs).select(
         "doc_id",
         "source",
         F.posexplode(_windows("toks", size)).alias("chunk_number", "window"),
@@ -71,6 +70,10 @@ def chunk_documents(spark: SparkSession, sf_dir: str, size: int = CHUNK_TOKENS) 
         F.array_join("window", " ").alias("chunk_content"),
         F.size("window").cast("bigint").alias("chunk_tokens"),
     )
+
+
+def chunk_documents(spark: SparkSession, sf_dir: str, size: int = CHUNK_TOKENS) -> DataFrame:
+    return chunks_from_documents(load_table(spark, sf_dir, "documents"), size)
 
 
 CHUNK_SQL = f"""
@@ -89,9 +92,9 @@ FROM expanded
 """
 
 
-def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) -> DataFrame:
+def sections_from_documents(docs: DataFrame, size: int = SECTION_TOKENS) -> DataFrame:
     """Coarse sections with hierarchy breadcrumbs (source > doc > section)."""
-    sec = _tokenised(spark, sf_dir).select(
+    sec = _tokenised(docs).select(
         "doc_id",
         "source",
         F.size("toks").alias("doc_tokens"),
@@ -108,6 +111,10 @@ def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) 
         F.size("window").cast("bigint").alias("section_tokens"),
         F.ceil(F.col("doc_tokens") / F.lit(size)).cast("int").alias("n_sections"),
     )
+
+
+def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) -> DataFrame:
+    return sections_from_documents(load_table(spark, sf_dir, "documents"), size)
 
 
 SECTION_SQL = f"""

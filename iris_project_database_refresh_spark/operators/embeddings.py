@@ -249,24 +249,25 @@ def _cosine(a, b):
 
 # --- deterministic feature-hash embedding -----------------------------------
 
-def embed_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embed_documents(docs: DataFrame) -> DataFrame:
     """Hash each token into one of EMBED_DIM buckets; dims are bucket
     counts. Stands in for stage_04's API embedder with a function both
     engines compute bit-identically (md5-derived bucket)."""
-    docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")
     # hash every token once into its bucket id, THEN count per dim —
     # 16 filters over a small int array instead of 16 md5 passes.
     buckets = F.transform(
         toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint") % EMBED_DIM
     )
-
-    def dim_count(k: int):
-        return F.size(F.filter(F.col("buckets"), lambda b: b == k)).cast("bigint").alias(f"e{k}")
-
-    return docs.withColumn("buckets", buckets).select(
-        "doc_id", *[dim_count(k) for k in range(EMBED_DIM)]
+    # The counts as SQL text: one parse, where a Python lambda per dim
+    # costs a dozen py4j round trips to build.
+    return docs.withColumn("buckets", buckets).selectExpr(
+        "doc_id", *[f"CAST(size(filter(buckets, b -> b = {k})) AS BIGINT) AS e{k}" for k in range(EMBED_DIM)]
     )
+
+
+def embed_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return embed_documents(load_table(spark, sf_dir, "documents"))
 
 
 EMBED_SQL = f"""

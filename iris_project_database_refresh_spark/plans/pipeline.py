@@ -11,13 +11,16 @@ every stage reads what its upstream wrote instead of re-deriving it:
                ├─ content_chunking ─── chunks ─────────────────────┴─ manifest ┘
                └─ embedding_generation ─ embeddings
 
-The four document stages scan ``documents``; the merge also rebuilds
-the master-catalog stand-in from it (`operators/catalog._master`).
-Each stage is one lazy plan run by its write, and the stage's row count
-is an `Observation` on that write, so no stage is read back to be
-counted. The manifest's record counts come from the hash aggregates it
-runs anyway, and its source list from the validation output (one row
-per document_source).
+``documents`` is read once per cycle, inside the delta_detection stage
+(so an unreadable source leaves that stage's `Failure` row), and the
+prior master-catalog stand-in (`operators/catalog._master`) is derived
+from that one read; the stage bodies take both as DataFrames. Each
+stage is one lazy plan run by its write, and an `Observation` on that
+write gives the stage's row count, so no stage is read back to be
+counted. The same observations carry the manifest's figures: the
+content-hash sum of the master and chunks writes and the sorted source
+list of the validation write, so building the manifest starts no Spark
+job.
 
 A process-monitor log in the spirit of the reference's
 `process_monitor_logs` table (`database-schema.sql:258-280`: run_uuid,
@@ -39,7 +42,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import catalog, chunking, embeddings
-from ..sinks.deployment import generate_deployment_metadata, write_deployment_metadata
+from ..sinks.deployment import (
+    ExportedFile,
+    content_hash_sum,
+    format_content_hash,
+    generate_deployment_metadata,
+    write_deployment_metadata,
+)
+from ..sources.tables import load_table
 
 
 MONITOR_SCHEMA = pa.schema(
@@ -91,43 +101,62 @@ class StageMonitor:
         return spark.createDataFrame(table)
 
 
+def _source_list(_df: DataFrame):
+    """The manifest's source list: the sorted distinct document_source."""
+    return F.sort_array(F.collect_set("document_source")).alias("sources")
+
+
 def run_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """One full refresh cycle; returns row counts per stage output."""
     mon = StageMonitor()
-    counts: dict[str, int] = {}
+    observed: dict[str, dict] = {}  # output name -> its write's observation
 
-    def write(name: str, build) -> DataFrame:
-        """Write ``build()`` to ``out_dir/name``, count its rows on the
-        way, and return the written output for the downstream stages."""
+    def write(name: str, build, *aggs) -> DataFrame:
+        """Write ``build()`` to ``out_dir/name``, observing its row count
+        and each ``agg(df)`` on the way, and return the written output
+        for the downstream stages."""
         df = build()
         obs = Observation(name)
         path = os.path.join(out_dir, name)
-        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
-        counts[name] = obs.get["rows"]
+        observing = df.observe(obs, F.count(F.lit(1)).alias("rows"), *(agg(df) for agg in aggs))
+        observing.write.mode("overwrite").parquet(path)
+        observed[name] = obs.get
         return spark.read.schema(df.schema).parquet(path)
+
+    def detect_delta():
+        docs = load_table(spark, sf_dir, "documents")
+        prior = catalog._master(docs)
+        return docs, prior, write("delta", lambda: catalog.delta_from_documents(docs, prior))
+
+    def exported(name: str, df: DataFrame) -> ExportedFile:
+        got = observed[name]
+        return ExportedFile(name, df.columns, got["rows"], format_content_hash(got["hash_sum"], got["rows"]))
 
     # A manifest left by an earlier cycle would mark this one complete.
     for stale in glob.glob(os.path.join(out_dir, "deployment_metadata_*.json")):
         os.remove(stale)
     try:
-        delta = mon.run("delta_detection", write, "delta", lambda: catalog.catalog_delta(spark, sf_dir))
-        mon.run("section_processing", write, "sections", lambda: chunking.section_split(spark, sf_dir))
-        chunks = mon.run("content_chunking", write, "chunks", lambda: chunking.chunk_documents(spark, sf_dir))
-        mon.run("embedding_generation", write, "embeddings", lambda: embeddings.embed_feature_hash(spark, sf_dir))
-        master = mon.run("catalog_merge", write, "master", lambda: catalog.merge_from_delta(spark, sf_dir, delta))
-        validation = mon.run("validation", write, "validation", lambda: catalog.validate_master(master))
+        docs, prior, delta = mon.run("delta_detection", detect_delta)
+        mon.run("section_processing", write, "sections", lambda: chunking.sections_from_documents(docs))
+        chunks = mon.run(
+            "content_chunking", write, "chunks", lambda: chunking.chunks_from_documents(docs), content_hash_sum
+        )
+        mon.run("embedding_generation", write, "embeddings", lambda: embeddings.embed_documents(docs))
+        master = mon.run(
+            "catalog_merge", write, "master", lambda: catalog.merge_from_delta(prior, delta), content_hash_sum
+        )
+        mon.run("validation", write, "validation", lambda: catalog.validate_master(master), _source_list)
     finally:
         mon.run("monitor_flush", write, "monitor_logs", lambda: mon.to_df(spark).coalesce(1))
 
     # IT-handoff manifest next to the stage outputs
     # (`stage5_output_final_csv.py:431` generate_deployment_metadata).
     meta = generate_deployment_metadata(
-        master,
-        chunks,
-        sources_included=sorted(r.document_source for r in validation.select("document_source").collect()),
-        catalog_file="master",
-        content_file="chunks",
+        exported("master", master),
+        exported("chunks", chunks),
+        sources_included=observed["validation"]["sources"],
     )
+    counts = {name: got["rows"] for name, got in observed.items()}
     meta["file_info"]["stage_outputs"] = counts
     write_deployment_metadata(meta, out_dir)
     return counts

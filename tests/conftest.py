@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -70,3 +71,18 @@ def assert_matches_oracle(spark_df, oracle_con, sql, *, check_rows_only=False):
     want_n = _normalize(want, want_cols)
     mismatches = [(g, w) for g, w in zip(got_n, want_n) if g != w]
     assert not mismatches, f"value mismatch ({len(mismatches)} rows), first: {mismatches[:3]}"
+
+
+@contextmanager
+def job_group(spark, name):
+    """Yields a list that holds, on exit, the ids of the Spark jobs run
+    inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are delivered async
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(name))

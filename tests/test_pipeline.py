@@ -17,7 +17,7 @@ from iris_project_database_refresh_spark.sources.formats import (
 )
 from iris_project_database_refresh_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT
+from .conftest import SF_CORRECT, job_group
 
 
 STAGES = {
@@ -70,6 +70,7 @@ def test_full_refresh_pipeline(spark, refreshed):
         assert f"'{s}'" in meta["instructions"]["delete_query"]
     # hash is content-determined: recomputing over the written parquet agrees
     assert meta["file_info"]["catalog_hash"] == dataframe_content_hash(master)
+    assert meta["file_info"]["content_hash"] == dataframe_content_hash(chunks)
     # and order-insensitive: a shuffled frame hashes identically
     assert dataframe_content_hash(master.orderBy(F.rand(7))) == meta["file_info"]["catalog_hash"]
 
@@ -102,7 +103,7 @@ def test_failed_stage_leaves_failure_record(spark, tmp_path, monkeypatch):
     def boom(*_args, **_kwargs):
         raise RuntimeError("chunker exploded")
 
-    monkeypatch.setattr(chunking, "chunk_documents", boom)
+    monkeypatch.setattr(chunking, "chunks_from_documents", boom)
     with pytest.raises(RuntimeError, match="chunker exploded"):
         run_refresh(spark, SF_CORRECT, out)
 
@@ -112,6 +113,30 @@ def test_failed_stage_leaves_failure_record(spark, tmp_path, monkeypatch):
     assert "chunker exploded" in rows["content_chunking"].decision_details
     assert rows["delta_detection"].status == rows["section_processing"].status == "Success"
     assert glob.glob(out + "/deployment_metadata_*.json") == []
+
+
+def test_unreadable_source_leaves_failure_record(spark, tmp_path):
+    """``documents`` is read inside the first stage, so a cycle whose
+    source is missing fails there, on disk, and writes no manifest."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    out = str(tmp_path / "refresh")
+    with pytest.raises(Exception, match="documents.parquet"):
+        run_refresh(spark, str(sf), out)
+
+    rows = spark.read.parquet(out + "/monitor_logs").collect()
+    assert [(r.stage_name, r.status) for r in rows] == [("delta_detection", "Failure")]
+    assert "documents.parquet" in rows[0].decision_details
+    assert glob.glob(out + "/deployment_metadata_*.json") == []
+
+
+def test_warm_refresh_cycle_runs_at_most_twenty_jobs(spark, refreshed, tmp_path):
+    """A warm cycle reads ``documents`` once, runs each stage as its one
+    write, and takes the manifest's hashes, counts and sources from the
+    writes' observations rather than from re-scans."""
+    with job_group(spark, "refresh-cycle-jobs") as jobs:
+        run_refresh(spark, SF_CORRECT, str(tmp_path / "refresh"))
+    assert 0 < len(jobs) <= 20, jobs
 
 
 def test_refresh_of_empty_corpus(spark, tmp_path):

@@ -1,14 +1,13 @@
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 import pytest
 
 from iris_project_database_refresh_spark.operators import pq
 from iris_project_database_refresh_spark.operators.embeddings import knn_brute_force
 
-from .conftest import SF_CORRECT, assert_matches_oracle
+from .conftest import SF_CORRECT, assert_matches_oracle, job_group
 
 
 @pytest.mark.parametrize("name", sorted(pq.QUERIES))
@@ -107,21 +106,6 @@ def ivf_index(spark, tmp_path_factory):
     return d
 
 
-@contextmanager
-def _job_group(spark, name):
-    """Yields a list that holds, on exit, the ids of the Spark jobs run
-    inside the block."""
-    sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    jobs: list[int] = []
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are delivered async
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(name))
-
-
 def _local_queries(spark, qids, vecs):
     """A (query_id, q) DataFrame held in the plan itself (an inline
     table), so collecting it starts no Spark job."""
@@ -188,7 +172,7 @@ def test_query_ivf_index_runs_at_most_five_jobs(spark, ivf_index):
     query collect, the probe broadcast, the rank shuffle and the result."""
     from iris_project_database_refresh_spark.sinks.vector_index import query_ivf_index
 
-    with _job_group(spark, "ivf-query-jobs") as jobs:
+    with job_group(spark, "ivf-query-jobs") as jobs:
         rows = query_ivf_index(spark, ivf_index, SF_CORRECT).collect()
     assert rows
     assert 0 < len(jobs) <= 5, jobs
@@ -208,10 +192,10 @@ def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, 
     _, vecs = _corpus()
     qv = vecs[:2].copy()
     qv[1] = 0.0
-    with _job_group(spark, "ivf-zero-query") as jobs, pytest.raises(ValueError, match=r"query.*\[7\]"):
+    with job_group(spark, "ivf-zero-query") as jobs, pytest.raises(ValueError, match=r"query.*\[7\]"):
         search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 7], qv))
     assert jobs == []
-    with _job_group(spark, "ivf-short-query") as jobs, pytest.raises(ValueError):
+    with job_group(spark, "ivf-short-query") as jobs, pytest.raises(ValueError):
         search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 7], vecs[:2, :-1]))
     assert jobs == []
 
@@ -224,7 +208,7 @@ def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, 
     cv[book.column("cell").to_pylist().index(105)] = [0.0] * len(cv[0])
     i = book.schema.get_field_index("cv")
     papq.write_table(book.set_column(i, "cv", pa.array(cv, book.schema.field(i).type)), bad / "codebook" / "part-0.parquet")
-    with _job_group(spark, "ivf-zero-codebook") as jobs, pytest.raises(ValueError, match=r"codebook.*\[105\]"):
+    with job_group(spark, "ivf-zero-codebook") as jobs, pytest.raises(ValueError, match=r"codebook.*\[105\]"):
         search_ivf_index(spark, str(bad), _local_queries(spark, [6], vecs[:1]))
     assert jobs == []
 
