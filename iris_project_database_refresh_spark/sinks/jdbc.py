@@ -64,6 +64,12 @@ class JdbcUpsertSink:
         cols = ", ".join(f'"{c}"' for c in columns)
         return f"INSERT INTO {self.table} ({cols}) SELECT {cols} FROM {self.staging_table}"
 
+    def duplicate_keys_sql(self) -> str:
+        # a key staged twice would be inserted twice, and the total count
+        # verify cannot see it
+        keys = ", ".join(f'"{k}"' for k in self.key_columns)
+        return f"SELECT {keys} FROM {self.staging_table} GROUP BY {keys} HAVING count(*) > 1"
+
     def verify_sql(self) -> str:
         return f"SELECT count(*) FROM {self.table}"
 
@@ -94,8 +100,9 @@ class JdbcUpsertSink:
         mode='upsert' → delete-matching + insert; mode='full_refresh' →
         truncate + insert (stage_06 --full-refresh). The merge
         statements run in one transaction: a failure after the DELETE
-        rolls back instead of losing target rows. Returns the verify
-        payload {'table', 'rows'}.
+        rolls back instead of losing target rows. A batch holding one key
+        twice raises a ValueError naming it, and the target is left
+        unchanged. Returns the verify payload {'table', 'rows'}.
         """
         # coalesce, not repartition: the staging INSERTs keep the batch's
         # own partitioning, capped at num_partitions, without a shuffle.
@@ -114,6 +121,10 @@ class JdbcUpsertSink:
         try:
             conn.setAutoCommit(False)
             st = conn.createStatement()
+            dup = st.executeQuery(self.duplicate_keys_sql())
+            if dup.next():
+                key = tuple(dup.getObject(i + 1) for i in range(len(self.key_columns)))
+                raise ValueError(f"duplicate key {dict(zip(self.key_columns, key))} in the batch for {self.table}")
             for s in stmts:
                 st.execute(s)
             rs = st.executeQuery(self.verify_sql())

@@ -20,28 +20,57 @@ Search: the codebook (NCELLS rows) is read and validated on the driver
 and scored against the query vectors with `knn_ivf`'s own math
 (`unit_rows_np`, then `np.round(q @ C.T, 6)`, ordered by ccos desc and
 cell asc), so each query's NPROBE probes equal `knn_ivf`'s. Only the
-probed `cells/cell=<k>` directories are scanned — the `cell IN (...)`
-filter prunes them at planning time (PartitionFilters, asserted in
-tests) — and each query meets only its own probed cells through a
-broadcast of (query, probed cell) rows built on the JVM side. Cosines
-are `_cos`'s exact values. IO per search scales with the probed slice,
-not the corpus. Every read uses the schema the build wrote, so no read
-starts a schema-inference job.
+probed cells are read, and each query is ranked against its own probed
+cells alone. The rerank takes one of two paths, chosen from the size of
+the probed slice: its rows (the manifest's `cell_rows`) times the
+dimension times 8 bytes.
+
+* Under `DRIVER_SLICE_BYTES` the driver reads the probed
+  `cells/cell=<k>` directories with pyarrow and ranks them in numpy; the
+  result is a DataFrame over an Arrow table, so the search starts no
+  Spark job. A counted cell whose directory is missing, or whose rows
+  differ from the manifest's count, raises a ValueError naming it.
+* Otherwise Spark scans the probed cells — the `cell IN (...)` filter
+  prunes them at planning time (PartitionFilters, asserted in tests) —
+  and meets each query with its cells through a broadcast of (query,
+  probed cell) rows built on the JVM side. This is the path for slices
+  the driver cannot hold.
+
+Both paths give `_cos`'s exact values, so they return identical rows.
+The driver path replicates Spark's arithmetic rather than numpy's usual
+one: a dot product is `_dot`'s sequential left fold from 0.0
+(`np.cumsum(...)[..., -1]`, not the pairwise or BLAS sums of `@`), norms
+are the square roots of that fold, and the cosine is rounded as Spark's
+`round(x, 6)` rounds a double: HALF_UP on its decimal string, not
+numpy's half-to-even on the binary value. Every Spark read uses the
+schema the build wrote, so no read starts a schema-inference job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.advanced import CENTROID_BASE, IVF_K, IVF_QUERIES, NCELLS, NPROBE, _as_double, _cos, _dot_sql
+from ..operators.advanced import CENTROID_BASE, IVF_K, IVF_QUERIES, NCELLS, NPROBE, _as_double, _dot_sql
 from ..sources.tables import load_table
 
 CODEBOOK_SCHEMA = "cell bigint, cv array<double>"
 CELLS_SCHEMA = "vec_id bigint, v array<double>, cell bigint"
+RESULT_SCHEMA = "query_id bigint, neighbor_id bigint, rank bigint, cosine double"
+
+# The driver holds a probed slice as a float64 matrix and, while ranking
+# one query, two temporaries of up to the same size (the products and
+# their running sum), so its peak is about three times the slice. At
+# 32 MiB (4,000 rows of 1,000 dimensions) one query's fold takes about
+# 70 ms on one core, while the Spark plan costs about 1 s in fixed job
+# overhead however small the slice; above this size the work is better
+# spread over executors than held in one process.
+DRIVER_SLICE_BYTES = 32 << 20
+_MICRO = Decimal("1e-6")
 
 
 def _norm_sql(a: str) -> str:
@@ -115,19 +144,19 @@ def search_ivf_index(spark: SparkSession, index_dir: str, queries: DataFrame) ->
     """Top-IVF_K neighbours of each query vector from the persisted index.
 
     ``queries`` has columns ``query_id`` (bigint) and ``q`` (array of
-    numbers). Query ids share the corpus id space: a query that is itself
-    a corpus vector is not returned as its own neighbour. The query
-    vectors are collected once to choose the probes; they are re-read on
-    the JVM side for the rerank, never rebuilt from Python. Zero-norm
-    vectors, a wrong dimension or duplicate query ids raise a ValueError
-    before the index is scanned. Output: (query_id,
-    neighbor_id, rank, cosine)."""
+    numbers, ranked as doubles). Query ids share the corpus id space: a
+    query that is itself a corpus vector is not returned as its own
+    neighbour. The query vectors are collected once to choose the
+    probes; a small probed slice is then ranked on the driver, a large
+    one by Spark (module docstring). Zero-norm vectors, a wrong dimension
+    or duplicate query ids raise a ValueError before the index is
+    scanned. Output: (query_id, neighbor_id, rank, cosine)."""
     import numpy as np
 
     from ..functions.vectors import unit_rows_np
 
     with open(os.path.join(index_dir, "manifest.json")) as f:
-        nprobe = json.load(f)["nprobe"]
+        manifest = json.load(f)
     cells, cm = _read_codebook(index_dir)
     rows = queries.select("query_id", "q").collect()  # the query set: few rows
     qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
@@ -137,11 +166,83 @@ def search_ivf_index(spark: SparkSession, index_dir: str, queries: DataFrame) ->
     qm = np.array([r["q"] for r in rows], dtype=np.float64).reshape(len(rows), cm.shape[1])
     ccos = np.round(unit_rows_np(qm, "query", ids=qids) @ cm.T, 6)
     probes = {
-        int(qid): cells[np.lexsort((cells, -row))[:nprobe]].tolist()
+        int(qid): cells[np.lexsort((cells, -row))[: manifest["nprobe"]]].tolist()
         for qid, row in zip(qids, ccos)
     }
 
     probed = sorted({c for cs in probes.values() for c in cs})
+    counts = {c: manifest["cell_rows"].get(str(c), 0) for c in probed}
+    if sum(counts.values()) * cm.shape[1] * 8 < DRIVER_SLICE_BYTES:
+        return _rank_on_driver(spark, index_dir, qids, qm, probes, counts)
+    return _rank_on_spark(spark, index_dir, queries, probes, probed)
+
+
+def _fold_dot(a, b):
+    """`_dot`'s arithmetic in numpy: a sequential left fold of the
+    products over the last axis (0.0 + x is x, so the fold's zero drops)."""
+    import numpy as np
+
+    return np.cumsum(a * b, axis=-1)[..., -1]
+
+
+def _spark_round6(x):
+    """Spark's `round(x, 6)` on doubles: HALF_UP on the value's shortest
+    decimal string (Java's `BigDecimal.valueOf`). `np.round` rounds half
+    to even on the binary value and differs on ties. The `+ 0.0` turns
+    -0.0 into 0.0, as `BigDecimal` has no negative zero."""
+    import numpy as np
+
+    return np.array(
+        [float(Decimal(repr(v)).quantize(_MICRO, ROUND_HALF_UP)) for v in x.tolist()], dtype=np.float64
+    ) + 0.0
+
+
+def _read_cells(index_dir: str, counts: dict, dim: int):
+    """(vec_id, cell, vector matrix) of the probed cells, read with pyarrow.
+    A cell the manifest does not count is empty and is not read; a counted
+    cell that is missing or holds another number of rows raises."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    ids, cell_of, vecs = [], [], []
+    for c, n in counts.items():
+        if not n:
+            continue
+        path = os.path.join(index_dir, "cells", f"cell={c}")
+        if not os.path.isdir(path):
+            raise ValueError(f"index cell {c}: directory missing, manifest counts {n} rows")
+        t = pq.read_table(path, columns=["vec_id", "v"])
+        if t.num_rows != n:
+            raise ValueError(f"index cell {c}: {t.num_rows} rows read, manifest counts {n}")
+        ids.append(t.column("vec_id").to_numpy())
+        cell_of.append(np.full(n, c, dtype=np.int64))
+        vecs.append(t.column("v").combine_chunks().flatten().to_numpy().reshape(n, dim))
+    if not ids:
+        return np.empty(0, np.int64), np.empty(0, np.int64), np.empty((0, dim))
+    return np.concatenate(ids), np.concatenate(cell_of), np.concatenate(vecs)
+
+
+def _rank_on_driver(spark, index_dir, qids, qm, probes, counts) -> DataFrame:
+    """Rank each query against its probed cells in numpy, with `_cos`'s
+    exact values and the Spark path's order (cosine desc, id asc)."""
+    import numpy as np
+    import pyarrow as pa
+
+    vid, cell_of, vm = _read_cells(index_dir, counts, qm.shape[1])
+    vn = np.sqrt(_fold_dot(vm, vm))
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for qid, q in zip(qids, qm):
+        cand = np.flatnonzero(np.isin(cell_of, probes[int(qid)]) & (vid != qid))
+        cos = _spark_round6(_fold_dot(vm[cand], q) / (np.sqrt(_fold_dot(q, q)) * vn[cand]))
+        top = np.lexsort((vid[cand], -cos))[:IVF_K]
+        parts.append((np.full(len(top), qid), vid[cand][top], np.arange(1, len(top) + 1, dtype=np.int64), cos[top]))
+    cols = [np.concatenate(c) for c in zip(*parts)]
+    return spark.createDataFrame(pa.table(cols, names=["query_id", "neighbor_id", "rank", "cosine"]), RESULT_SCHEMA)
+
+
+def _rank_on_spark(spark, index_dir, queries, probes, probed) -> DataFrame:
+    """Rank each query against its probed cells in Spark: a partition-pruned
+    scan of the probed cells meets a broadcast of (query, probed cell)."""
     index = (
         spark.read.schema(CELLS_SCHEMA)
         .parquet(os.path.join(index_dir, "cells"))
@@ -151,8 +252,8 @@ def search_ivf_index(spark: SparkSession, index_dir: str, queries: DataFrame) ->
     entries = ", ".join(f"{qid}L, array({', '.join(f'{c}L' for c in cs)})" for qid, cs in probes.items())
     probe_cells = f"element_at(map({entries}), query_id)" if probes else "cast(array() AS array<bigint>)"
     pairs = queries.selectExpr(
-        "query_id", "q", f"{_norm_sql('q')} AS qn", f"explode({probe_cells}) AS cell"
-    )
+        "query_id", "CAST(q AS array<double>) AS q"
+    ).selectExpr("query_id", "q", f"{_norm_sql('q')} AS qn", f"explode({probe_cells}) AS cell")
     cand = (
         index.selectExpr("vec_id", "v", "cell", f"{_norm_sql('v')} AS vn")
         .join(F.broadcast(pairs), "cell")
@@ -171,189 +272,18 @@ def search_ivf_index(spark: SparkSession, index_dir: str, queries: DataFrame) ->
 
 def query_ivf_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFrame:
     """Serve the standard IVF query set (vec_id < IVF_QUERIES) from the
-    persisted index; rows equal `knn_ivf`'s."""
-    queries = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < IVF_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("q"))
+    persisted index; rows equal `knn_ivf`'s. The query set is read with
+    pyarrow (the row filter pushed down) and handed over as a DataFrame
+    over an Arrow table, so collecting it starts no Spark job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        columns=["vec_id", "embedding"],
+        filters=[("vec_id", "<", IVF_QUERIES)],
     )
-    return search_ivf_index(spark, index_dir, queries)
-
-
-# --- Persisted HNSW index ------------------------------------------------------
-#
-# `operators/pq.hnsw_build_links` computes the completed-index link
-# lists in-query; a deployment builds them ONCE per refresh and serves
-# greedy-descent reads from the artifact — the split pgvector makes for
-# its hnsw index type (`database-schema.sql:245` region: the reference
-# serves ANN from pgvector, and hnsw is its recommended index for this
-# read-heavy workload). Layout:
-#
-#     index_dir/
-#       links/lyr=<l>/       -- per-layer link lists, neighbor vector INLINE
-#       entry/               -- 1-row parquet: entry node id + vector + max level
-#       manifest.json        -- m, m0, level_cap, entry, per-layer link rows
-#
-# The serving property this buys at 100 TB: a descent touches one layer
-# partition per hop, and because `links/` is hive-partitioned on `lyr`,
-# each hop's scan PRUNES to that layer at planning time (PartitionFilters
-# — asserted in tests); within the layer, the `vec_id = cursor` filter
-# rides parquet row-group stats. Each link row carries its neighbor's
-# vector inline, so a hop needs NO join back to the corpus — IO per hop
-# is the cursor's <= M (2M at layer 0) link rows. That duplicates vector
-# storage up to (level+1) x M-fold, the classic index-vs-heap tradeoff:
-# pgvector stores vectors once and pays a random heap fetch per edge;
-# a columnar engine ships the vector with the edge and pays bytes
-# instead of seeks. Layer-l membership halves per level, so the inline
-# copies sum to a bounded ~3x of the corpus (Σ (l+1)·M·N/2^l style
-# geometric, dominated by the 2M layer-0 lists).
-#
-# Parity contract (the `build_ivf_index` convention): serving the
-# standard query set from the artifact returns EXACTLY
-# `pq.hnsw_search_sim`'s rows — same descent, same 6dp-cosine id-tie
-# ranks — because the stored lists ARE the completed-index link
-# definition `_hnsw_descent.scored_step` recomputes on the fly.
-
-def build_hnsw_index(spark: SparkSession, sf_dir: str, index_dir: str) -> dict:
-    """Persist `hnsw_build_links`' completed-index link lists as a
-    layer-partitioned serving artifact. Returns the manifest."""
-    from ..operators.pq import HNSW_LEVEL_CAP, HNSW_M, hnsw_build_links
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
+    queries = pa.table(
+        {"query_id": t.column("vec_id"), "q": t.column("embedding").cast(pa.list_(pa.float64()))}
     )
-    links = hnsw_build_links(spark, sf_dir)
-    rows = links.join(
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("nv")),
-        "neighbor_id",
-    ).select("lyr", "vec_id", "rank", "neighbor_id", "cosine", "nv")
-    (
-        rows.repartition("lyr")
-        .write.partitionBy("lyr")
-        .mode("overwrite")
-        .parquet(os.path.join(index_dir, "links"))
-    )
-    ent = (
-        links.where(F.col("is_entry") == 1)
-        .select("vec_id", F.col("lyr").alias("max_lvl"))
-        .distinct()
-        .join(emb, "vec_id")
-        .select(F.col("vec_id").alias("evid"), F.col("max_lvl"), "v")
-    )
-    ent.coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "entry"))
-    e = spark.read.parquet(os.path.join(index_dir, "entry")).collect()[0]  # 1 row
-    layer_rows = {
-        str(r["lyr"]): r["n"]
-        for r in links.groupBy("lyr").agg(F.count(F.lit(1)).alias("n")).collect()
-    }  # bounded: <= HNSW_LEVEL_CAP + 1 rows
-    manifest = {
-        "m": HNSW_M,
-        "m0": 2 * HNSW_M,
-        "level_cap": HNSW_LEVEL_CAP,
-        "entry": int(e["evid"]),
-        "max_level": int(e["max_lvl"]),
-        "layer_link_rows": layer_rows,
-    }
-    with open(os.path.join(index_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest
-
-
-def query_hnsw_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFrame:
-    """Serve the standard HNSW query set (`pq.PQ_QUERIES`, top
-    `pq.HNSW_SEARCH_K`) from the persisted artifact. The descent is a
-    COORDINATOR loop — exactly what a pgvector hnsw read is: per hop,
-    one scan of the single `lyr=<l>` partition (planning-time pruned,
-    PartitionFilters) further cut to the cursors' rows by a pushed
-    `vec_id IN (...)` row-group filter, scored against the broadcast
-    query rows in-engine (`_cos`, so descent compares happen on the
-    same 6dp doubles as the in-query read); only the <= |queries|-row
-    winner set comes back to the coordinator per hop — the bounded
-    metadata collect `query_ivf_index`'s probed-cells decision already
-    set the precedent for. IO per hop is the cursors' link rows; no
-    hop touches the corpus table. Output is bit-identical to
-    `pq.hnsw_search_sim`."""
-    from ..operators.pq import HNSW_SEARCH_K, PQ_QUERIES
-
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
-    entry_id = int(manifest["entry"])
-
-    qs = (
-        load_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") < PQ_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), _as_double("embedding").alias("q"))
-        .localCheckpoint(eager=False)  # probed once per hop
-    )
-    ent = spark.read.parquet(os.path.join(index_dir, "entry"))  # 1 row
-    # state[qid] = (cur_id, cqs) — cqs is cos(q, cursor), the self
-    # option's score; all cosines in state were computed BY SPARK
-    state = {
-        int(r["query_id"]): (entry_id, r["cqs"])
-        for r in qs.crossJoin(F.broadcast(ent))
-        .select("query_id", _cos(F.col("q"), F.col("v")).alias("cqs"))
-        .collect()  # bounded: |queries| rows
-    }
-
-    links_root = os.path.join(index_dir, "links")
-
-    def layer_candidates(lyr: int):
-        """(query_id, nid, cq, cqs-carry) rows of the cursors' stored
-        link lists at `lyr`: partition-pruned to the layer, row-group-
-        pruned to the cursor ids, scored in-engine."""
-        cur_rows = [(qid, cid, cqs) for qid, (cid, cqs) in sorted(state.items())]
-        cur_df = spark.createDataFrame(cur_rows, "query_id long, cur_id long, cqs double")
-        lk = (
-            spark.read.parquet(links_root)
-            .where(F.col("lyr") == lyr)
-            .where(F.col("vec_id").isin([c for _, c, _ in cur_rows]))
-        )
-        return lk.join(
-            F.broadcast(cur_df), F.col("vec_id") == F.col("cur_id")
-        ).join(F.broadcast(qs), "query_id")
-
-    for lyr in range(int(manifest["max_level"]), 0, -1):
-        scored = layer_candidates(lyr).select(
-            "query_id",
-            F.col("neighbor_id").alias("nid"),
-            _cos(F.col("q"), F.col("nv")).alias("cq"),
-        )
-        # greedy hop decided coordinator-side on engine-computed 6dp
-        # values: argmax of (cq, -nid) over candidates, then vs self
-        best: dict[int, tuple] = {}
-        for r in scored.collect():  # bounded: <= |queries| x M rows
-            k = (r["cq"], -r["nid"])
-            if r["query_id"] not in best or k > best[r["query_id"]][0]:
-                best[r["query_id"]] = (k, int(r["nid"]), r["cq"])
-        for qid, (cur_id, cqs) in list(state.items()):
-            if qid in best and best[qid][0] > (cqs, -cur_id):
-                state[qid] = (best[qid][1], best[qid][2])
-        # a query whose cursor has no links at this layer (single-member
-        # layer) simply keeps its cursor — the left-join semantics of
-        # the in-query read, for free
-
-    final0 = layer_candidates(0)
-    cand0 = final0.select(
-        "query_id",
-        F.col("neighbor_id").alias("nid"),
-        _cos(F.col("q"), F.col("nv")).alias("cq"),
-        F.col("cur_id").alias("final_node"),
-    )
-    landing = spark.createDataFrame(
-        [(qid, cid, cqs, cid) for qid, (cid, cqs) in sorted(state.items())],
-        "query_id long, nid long, cq double, final_node long",
-    )
-    u0 = cand0.unionByName(landing).where(F.col("nid") != F.col("query_id"))
-    wf = Window.partitionBy("query_id").orderBy(F.desc("cq"), F.asc("nid"))
-    return (
-        u0.withColumn("rank", F.row_number().over(wf))
-        .where(F.col("rank") <= HNSW_SEARCH_K)
-        .select(
-            F.col("query_id").cast("bigint").alias("query_id"),
-            F.col("rank").cast("bigint").alias("rank"),
-            F.col("nid").alias("neighbor_id"),
-            F.col("cq").alias("cosine"),
-            F.col("final_node").cast("bigint").alias("final_node"),
-            F.lit(entry_id).cast("bigint").alias("entry_node"),
-        )
-    )
+    return search_ivf_index(spark, index_dir, spark.createDataFrame(queries))

@@ -9,6 +9,8 @@ from iris_project_database_refresh_spark.operators.embeddings import knn_brute_f
 
 from .conftest import SF_CORRECT, assert_matches_oracle, job_group
 
+SF_BENCH = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")  # the bench corpus, beside SF_CORRECT
+
 
 @pytest.mark.parametrize("name", sorted(pq.QUERIES))
 def test_matches_oracle(spark, oracle, name):
@@ -72,12 +74,13 @@ def test_matryoshka_recall_bounds(spark):
         assert r.recall_bp == r.hits * 10000 // pq.PQ_K
 
 
-def test_persisted_ivf_index_serves_identically(spark, tmp_path):
+def test_persisted_ivf_index_serves_identically(spark, tmp_path, monkeypatch):
     """Index-as-artifact: build the partitioned IVF layout once, serve
     the standard query set from it — results must equal the in-query
-    knn_ivf exactly, and the cells scan must be partition-pruned to the
-    probed cells (PartitionFilters on cell)."""
+    knn_ivf exactly, and on the Spark rerank path the cells scan must be
+    partition-pruned to the probed cells (PartitionFilters on cell)."""
     from iris_project_database_refresh_spark.operators.advanced import knn_ivf
+    from iris_project_database_refresh_spark.sinks import vector_index
     from iris_project_database_refresh_spark.sinks.vector_index import (
         build_ivf_index,
         query_ivf_index,
@@ -90,7 +93,8 @@ def test_persisted_ivf_index_serves_identically(spark, tmp_path):
     want = sorted(tuple(r) for r in knn_ivf(spark, SF_CORRECT).collect())
     got = sorted(tuple(r) for r in served.collect())
     assert got == want
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
+    plan = query_ivf_index(spark, d, SF_CORRECT)._jdf.queryExecution().executedPlan().toString()
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -115,11 +119,11 @@ def _local_queries(spark, qids, vecs):
     return spark.sql(f"SELECT * FROM VALUES {values} AS t(query_id, q)")
 
 
-def _corpus():
+def _corpus(sf_dir=SF_CORRECT):
     import numpy as np
     import pyarrow.parquet as papq
 
-    t = papq.read_table(os.path.join(SF_CORRECT, "embeddings.parquet"), columns=["vec_id", "embedding"])
+    t = papq.read_table(os.path.join(sf_dir, "embeddings.parquet"), columns=["vec_id", "embedding"])
     return t["vec_id"].to_numpy(), np.array(t["embedding"].to_pylist(), dtype=np.float64)
 
 
@@ -166,16 +170,149 @@ def test_search_ivf_index_matches_numpy_within_probes(spark, ivf_index):
         assert np.abs(np.array([c for _, _, c in rows]) - cos[top]).max() <= 1e-6
 
 
-def test_query_ivf_index_runs_at_most_five_jobs(spark, ivf_index):
+def test_query_ivf_index_runs_at_most_five_jobs(spark, ivf_index, monkeypatch):
     """A search probes and reranks; it does not re-score the corpus
-    against the codebook. Its jobs: the embeddings schema read, the
-    query collect, the probe broadcast, the rank shuffle and the result."""
+    against the codebook. On the driver path (the probed slice of this
+    corpus is small) it starts no Spark job. On the Spark path its jobs
+    are at most the probe broadcast, the rank shuffle and the result."""
+    from iris_project_database_refresh_spark.sinks import vector_index
     from iris_project_database_refresh_spark.sinks.vector_index import query_ivf_index
 
     with job_group(spark, "ivf-query-jobs") as jobs:
         rows = query_ivf_index(spark, ivf_index, SF_CORRECT).collect()
     assert rows
+    assert jobs == []
+    monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
+    with job_group(spark, "ivf-query-jobs-spark") as jobs:
+        assert sorted(query_ivf_index(spark, ivf_index, SF_CORRECT).collect()) == sorted(rows)
     assert 0 < len(jobs) <= 5, jobs
+
+
+@pytest.fixture(scope="module")
+def ivf_index_sf01(spark, tmp_path_factory):
+    from iris_project_database_refresh_spark.sinks.vector_index import build_ivf_index
+
+    d = str(tmp_path_factory.mktemp("ivf_index_sf01"))
+    build_ivf_index(spark, SF_BENCH, d)
+    return d
+
+
+@pytest.mark.parametrize("corpus", ["sf0.01", "sf0.1"])
+def test_search_ivf_index_paths_return_identical_rows(spark, ivf_index, ivf_index_sf01, corpus, monkeypatch):
+    """The driver rerank and the Spark rerank return identical (query_id,
+    neighbor_id, rank, cosine) rows — the cosines bit for bit — for the
+    standard query set and for seeded perturbed non-corpus queries; the
+    cosines are within 1e-6 of numpy's."""
+    import numpy as np
+
+    from iris_project_database_refresh_spark.sinks import vector_index
+    from iris_project_database_refresh_spark.sinks.vector_index import query_ivf_index, search_ivf_index
+
+    sf_dir, index_dir = (SF_CORRECT, ivf_index) if corpus == "sf0.01" else (SF_BENCH, ivf_index_sf01)
+    ids, vecs = _corpus(sf_dir)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    rng = np.random.default_rng(23)
+    query_sets = [None]
+    for _ in range(2):
+        qv = vecs[rng.choice(len(ids), size=8, replace=False)]
+        query_sets.append(qv + rng.normal(scale=0.5 * vecs.std(), size=qv.shape))
+
+    def search(qv):
+        if qv is None:
+            return query_ivf_index(spark, index_dir, sf_dir).collect()
+        qids = np.arange(10_000, 10_000 + len(qv))
+        return search_ivf_index(spark, index_dir, _local_queries(spark, qids, qv)).collect()
+
+    for qv in query_sets:
+        with job_group(spark, f"ivf-paths-driver-{corpus}") as jobs:
+            on_driver = sorted(tuple(r) for r in search(qv))
+        assert jobs == []
+        with monkeypatch.context() as m, job_group(spark, f"ivf-paths-spark-{corpus}") as jobs:
+            m.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
+            on_spark = sorted(tuple(r) for r in search(qv))
+        assert jobs
+        assert on_driver and on_driver == on_spark
+        for qid, nid, _, cos in on_driver:
+            q = unit[np.searchsorted(ids, qid)] if qv is None else qv[qid - 10_000] / np.linalg.norm(qv[qid - 10_000])
+            assert abs(cos - unit[np.searchsorted(ids, nid)] @ q) <= 1e-6
+
+
+def test_driver_rerank_arithmetic_matches_spark(spark):
+    """The driver's dot product and rounding equal Spark's `_dot_sql` and
+    `round(x, 6)` bit for bit, on inputs where numpy's own sum and
+    rounding differ from Spark's: products whose sum depends on the order
+    of the additions, and values on a rounding tie or rounding to zero
+    from below."""
+    import numpy as np
+
+    from iris_project_database_refresh_spark.operators.advanced import _dot_sql
+    from iris_project_database_refresh_spark.sinks.vector_index import _fold_dot, _spark_round6
+
+    def bits(x):
+        return np.asarray(x, dtype=np.float64).view(np.int64).tolist()
+
+    rng = np.random.default_rng(5)
+    a = rng.normal(size=(20, 64)) * 10.0 ** rng.integers(-8, 8, size=(20, 64))
+    b = rng.normal(size=(20, 64))
+    pairs = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))], "i int, a array<double>, b array<double>"
+    )
+    dots = sorted(pairs.selectExpr("i", f"{_dot_sql('a', 'b')} AS d").collect())
+    assert bits(_fold_dot(a, b)) == bits([r["d"] for r in dots])
+    assert bits(_fold_dot(a, b)) != bits((a * b).sum(axis=-1))
+
+    x = np.array([5e-7, -5e-7, 0.1234565, 2.5e-6, 1.0000005, -0.9999995, 0.3333335, -1e-9, 1e-9, 0.7071067811865476])
+    values = ", ".join(f"({i}, {v!r}D)" for i, v in enumerate(x))
+    rounded = sorted(spark.sql(f"SELECT i, round(x, 6) AS r FROM VALUES {values} AS t(i, x)").collect())
+    assert bits(_spark_round6(x)) == bits([r["r"] for r in rounded])
+    assert bits(_spark_round6(x)) != bits(np.round(x, 6))
+
+
+def test_driver_rerank_checks_cells_against_manifest(spark, ivf_index, tmp_path, monkeypatch):
+    """On the driver path a probed cell the manifest does not count is
+    empty and is not read; a counted cell whose directory is missing, or
+    whose rows differ from the manifest's count, raises a ValueError
+    naming the cell."""
+    import json
+    import shutil
+
+    import pyarrow.parquet as papq
+
+    from iris_project_database_refresh_spark.sinks import vector_index
+    from iris_project_database_refresh_spark.sinks.vector_index import query_ivf_index
+
+    want = query_ivf_index(spark, ivf_index, SF_CORRECT).collect()
+    with open(os.path.join(ivf_index, "manifest.json")) as f:
+        cells = json.load(f)["cell_rows"]
+    cell_of = {
+        vid: c
+        for c in cells
+        for vid in papq.read_table(os.path.join(ivf_index, "cells", f"cell={c}"), columns=["vec_id"])["vec_id"].to_pylist()
+    }
+    c = cell_of[want[0]["neighbor_id"]]  # a cell that a standard query probes
+
+    def damaged(name, edit):
+        d = tmp_path / name
+        shutil.copytree(ivf_index, d)
+        m = json.loads((d / "manifest.json").read_text())
+        edit(d, m["cell_rows"])
+        (d / "manifest.json").write_text(json.dumps(m))
+        return str(d)
+
+    d = damaged("missing", lambda d, counts: shutil.rmtree(d / "cells" / f"cell={c}"))
+    with pytest.raises(ValueError, match=rf"cell {c}: directory missing"):
+        query_ivf_index(spark, d, SF_CORRECT)
+    d = damaged("recount", lambda d, counts: counts.update({c: counts[c] + 1}))
+    with pytest.raises(ValueError, match=rf"cell {c}: {cells[c]} rows read"):
+        query_ivf_index(spark, d, SF_CORRECT)
+
+    # an uncounted cell is empty: its directory is not even opened, and
+    # the Spark path, which finds no such partition, returns the same rows
+    d = damaged("uncounted", lambda d, counts: (counts.pop(c), shutil.rmtree(d / "cells" / f"cell={c}")))
+    got = sorted(tuple(r) for r in query_ivf_index(spark, d, SF_CORRECT).collect())
+    assert got and all(cell_of[nid] != c for _, nid, _, _ in got)
+    monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
+    assert got == sorted(tuple(r) for r in query_ivf_index(spark, d, SF_CORRECT).collect())
 
 
 def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, tmp_path):
@@ -197,6 +334,9 @@ def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, 
     assert jobs == []
     with job_group(spark, "ivf-short-query") as jobs, pytest.raises(ValueError):
         search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 7], vecs[:2, :-1]))
+    assert jobs == []
+    with job_group(spark, "ivf-duplicate-query") as jobs, pytest.raises(ValueError, match="duplicate query ids"):
+        search_ivf_index(spark, ivf_index, _local_queries(spark, [6, 6], vecs[:2]))
     assert jobs == []
 
     bad = tmp_path / "bad_index"
@@ -489,50 +629,6 @@ def test_swapped_hnsw_build_links_matches_oracle(spark, tmp_path):
         )
     finally:
         con.close()
-
-
-def test_persisted_hnsw_index_serves_identically(spark, tmp_path):
-    """Index-as-artifact for the HNSW family (the IVF-sink convention):
-    build the layer-partitioned link-list layout once, serve the
-    standard query set from it — results must equal the in-query
-    hnsw_search_sim exactly, every links scan must be partition-pruned
-    to one layer (PartitionFilters on lyr), and the descent scans must
-    push the cursor-id filter to the row-group level (PushedFilters
-    In(vec_id, ...)) — no hop touches the corpus table."""
-    import re
-
-    from iris_project_database_refresh_spark.operators.pq import hnsw_search_sim
-    from iris_project_database_refresh_spark.sinks.vector_index import (
-        build_hnsw_index,
-        query_hnsw_index,
-    )
-
-    d = str(tmp_path / "hnsw")
-    manifest = build_hnsw_index(spark, SF_CORRECT, d)
-    assert manifest["m"] == 16 and manifest["m0"] == 32
-    assert sum(manifest["layer_link_rows"].values()) > 0
-    assert str(manifest["max_level"]) in manifest["layer_link_rows"]
-
-    served = query_hnsw_index(spark, d, SF_CORRECT)
-    want = sorted(tuple(r) for r in hnsw_search_sim(spark, SF_CORRECT).collect())
-    got = sorted(tuple(r) for r in served.collect())
-    assert got == want
-
-    # plan shape of one descent hop: layer pruned at planning time,
-    # cursor ids pushed to parquet
-    from iris_project_database_refresh_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    probe = (
-        spark.read.parquet(os.path.join(d, "links"))
-        .where(F.col("lyr") == 1)
-        .where(F.col("vec_id").isin([int(manifest["entry"])]))
-    )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "lyr" in m.group(1), f"links scan not layer-pruned: {plan[:400]}"
-    m2 = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert m2 and "vec_id" in m2.group(1), f"cursor filter not pushed: {plan[:400]}"
 
 
 def test_hnsw_descent_parallel_path(spark, tmp_path):

@@ -101,6 +101,20 @@ def test_jdbc_upsert_rolls_back_on_failure(spark):
     assert _read_target(spark, url, "target") == {1: "keep-1", 2: "keep-2"}
 
 
+def test_jdbc_upsert_rejects_duplicate_batch_keys(spark):
+    """A batch that holds one key twice raises a ValueError naming the
+    key, and the target is left unchanged (it would otherwise gain both
+    rows, which the total-count verify cannot see)."""
+    url = _derby_url("upsert_dup")
+    _seed_target(spark, url, [(1, "keep-1"), (2, "keep-2")])
+    sink = JdbcUpsertSink(url=url, table="target", key_columns=("doc_id",), properties=DERBY_PROPS)
+    batch = spark.createDataFrame([(2, "a"), (3, "b"), (3, "c")], "doc_id int, content string")
+    for mode in ("upsert", "full_refresh"):
+        with pytest.raises(ValueError, match=r"duplicate key \{'doc_id': 3\}"):
+            sink.write(batch, mode=mode, num_partitions=2)
+        assert _read_target(spark, url, "target") == {1: "keep-1", 2: "keep-2"}
+
+
 def test_jdbc_partitioned_source_roundtrip(spark):
     """Range- and predicate-partitioned reads return the full table and
     actually split the scan into parallel partitions."""
