@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -93,8 +95,13 @@ def test_persisted_ivf_index_serves_identically(spark, tmp_path, monkeypatch):
     want = sorted(tuple(r) for r in knn_ivf(spark, SF_CORRECT).collect())
     got = sorted(tuple(r) for r in served.collect())
     assert got == want
+    # the search returns a DataFrame over its Arrow result; the cells scan
+    # is in the plan that the Spark rerank builds and collects
     monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
-    plan = query_ivf_index(spark, d, SF_CORRECT)._jdf.queryExecution().executedPlan().toString()
+    ranked, rank_on_spark = [], vector_index._rank_on_spark
+    monkeypatch.setattr(vector_index, "_rank_on_spark", lambda *a: ranked.append(rank_on_spark(*a)) or ranked[-1])
+    assert sorted(tuple(r) for r in query_ivf_index(spark, d, SF_CORRECT).collect()) == want
+    plan = ranked[0]._jdf.queryExecution().executedPlan().toString()
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -127,6 +134,46 @@ def _corpus(sf_dir=SF_CORRECT):
     return t["vec_id"].to_numpy(), np.array(t["embedding"].to_pylist(), dtype=np.float64)
 
 
+def _ivf_numpy(ids, vecs, qids, qv):
+    """The numpy reference of an IVF search over the corpus (ids, vecs):
+    each corpus row's cell, and each query's top IVF_K by brute force over
+    its NPROBE nearest cells, a query never its own neighbour, as
+    {qid: (neighbour ids, unrounded cosines)}."""
+    import numpy as np
+
+    from iris_project_database_refresh_spark.operators.advanced import CENTROID_BASE, IVF_K, NCELLS, NPROBE
+
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    cell_ids = np.arange(CENTROID_BASE, CENTROID_BASE + NCELLS)
+    cents = unit[np.searchsorted(ids, cell_ids)]
+    cell_of = cell_ids[np.argmax(np.round(unit @ cents.T, 6), axis=1)]
+    want = {}
+    for qid, q in zip(qids, qv):
+        qu = q / np.linalg.norm(q)
+        probes = cell_ids[np.lexsort((cell_ids, -np.round(cents @ qu, 6)))[:NPROBE]]
+        cand = np.flatnonzero(np.isin(cell_of, probes) & (ids != qid))
+        cos = unit[cand] @ qu
+        top = np.lexsort((ids[cand], -np.round(cos, 6)))[:IVF_K]
+        want[int(qid)] = (ids[cand][top].tolist(), cos[top])
+    return cell_of, want
+
+
+def _assert_matches_numpy(rows, want):
+    """Search rows hold `_ivf_numpy`'s neighbours in its ranks, with
+    cosines within 1e-6."""
+    import numpy as np
+
+    got: dict[int, list] = {}
+    for r in rows:
+        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
+    assert sorted(got) == sorted(want)
+    for qid, (nids, cos) in want.items():
+        ranked = sorted(got[qid])
+        assert [k for k, _, _ in ranked] == list(range(1, len(nids) + 1))
+        assert [n for _, n, _ in ranked] == nids
+        assert np.abs(np.array([c for _, _, c in ranked]) - cos).max() <= 1e-6
+
+
 def test_search_ivf_index_matches_numpy_within_probes(spark, ivf_index):
     """Queries that are not corpus rows (seeded perturbations of corpus
     vectors) get the numpy brute force over each query's NPROBE nearest
@@ -136,38 +183,21 @@ def test_search_ivf_index_matches_numpy_within_probes(spark, ivf_index):
 
     import numpy as np
 
-    from iris_project_database_refresh_spark.operators.advanced import CENTROID_BASE, IVF_K, NCELLS, NPROBE
     from iris_project_database_refresh_spark.sinks.vector_index import search_ivf_index
 
     ids, vecs = _corpus()
-    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    cell_ids = np.arange(CENTROID_BASE, CENTROID_BASE + NCELLS)
-    cents = unit[np.searchsorted(ids, cell_ids)]
-    cell_of = cell_ids[np.argmax(np.round(unit @ cents.T, 6), axis=1)]
+    rng = np.random.default_rng(11)
+    qv = vecs[rng.choice(len(ids), size=6, replace=False)]
+    qv = qv + rng.normal(scale=0.5 * vecs.std(), size=qv.shape)
+    qids = np.arange(10_000, 10_000 + len(qv))
+    cell_of, want = _ivf_numpy(ids, vecs, qids, qv)
     with open(os.path.join(ivf_index, "manifest.json")) as f:
         manifest = json.load(f)
     cells, n = np.unique(cell_of, return_counts=True)
     assert manifest["cell_rows"] == {str(c): int(k) for c, k in zip(cells, n)}
 
-    rng = np.random.default_rng(11)
-    qv = vecs[rng.choice(len(ids), size=6, replace=False)]
-    qv = qv + rng.normal(scale=0.5 * vecs.std(), size=qv.shape)
-    qids = np.arange(10_000, 10_000 + len(qv))
-    got: dict[int, list] = {}
-    for r in search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv)).collect():
-        got.setdefault(r.query_id, []).append((r.rank, r.neighbor_id, r.cosine))
-    assert sorted(got) == qids.tolist()
+    _assert_matches_numpy(search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv)).collect(), want)
     assert search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv).limit(0)).collect() == []
-    for qid, q in zip(qids, qv):
-        qu = q / np.linalg.norm(q)
-        probes = cell_ids[np.lexsort((cell_ids, -np.round(cents @ qu, 6)))[:NPROBE]]
-        cand = np.flatnonzero(np.isin(cell_of, probes))
-        cos = unit[cand] @ qu
-        top = np.lexsort((ids[cand], -np.round(cos, 6)))[:IVF_K]
-        rows = sorted(got[qid])
-        assert [k for k, _, _ in rows] == list(range(1, len(top) + 1))
-        assert [n for _, n, _ in rows] == ids[cand][top].tolist()
-        assert np.abs(np.array([c for _, _, c in rows]) - cos[top]).max() <= 1e-6
 
 
 def test_query_ivf_index_runs_at_most_five_jobs(spark, ivf_index, monkeypatch):
@@ -313,6 +343,104 @@ def test_driver_rerank_checks_cells_against_manifest(spark, ivf_index, tmp_path,
     assert got and all(cell_of[nid] != c for _, nid, _, _ in got)
     monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
     assert got == sorted(tuple(r) for r in query_ivf_index(spark, d, SF_CORRECT).collect())
+
+
+@contextmanager
+def _index_reads(monkeypatch):
+    """Yields a list that collects the path of every
+    `pyarrow.parquet.read_table` call made from `sinks/vector_index`."""
+    import pyarrow.parquet as papq
+
+    from iris_project_database_refresh_spark.sinks import vector_index
+
+    paths, read_table = [], papq.read_table
+
+    def counted(source, *args, **kwargs):
+        if sys._getframe(1).f_globals.get("__name__") == vector_index.__name__:
+            paths.append(str(source))
+        return read_table(source, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(papq, "read_table", counted)
+        yield paths
+
+
+def test_warm_search_reads_no_index_file_and_rebuild_is_served_fresh(spark, tmp_path, monkeypatch):
+    """A second search of one index version reads no index file: of its
+    pyarrow reads only the query set's remains. A rebuild into the same
+    directory from other vectors, with the same per-cell counts, is served
+    from the rebuilt cells (numpy brute force on the new vectors), never
+    from the cells kept for the old version."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from iris_project_database_refresh_spark.operators.advanced import CENTROID_BASE, IVF_QUERIES, NCELLS
+    from iris_project_database_refresh_spark.sinks.vector_index import build_ivf_index, query_ivf_index
+
+    d = str(tmp_path / "ivf")
+    old_counts = build_ivf_index(spark, SF_CORRECT, d)["cell_rows"]
+    before = query_ivf_index(spark, d, SF_CORRECT).collect()
+    with _index_reads(monkeypatch) as paths:
+        assert query_ivf_index(spark, d, SF_CORRECT).collect() == before
+    assert paths == [os.path.join(SF_CORRECT, "embeddings.parquet")]
+
+    # the vectors of each cell rotated among its non-codebook rows: the
+    # same cells and counts, other neighbours
+    ids, vecs = _corpus()
+    cell_of, _ = _ivf_numpy(ids, vecs, [], [])
+    vecs = vecs.astype(np.float32)
+    for c in np.unique(cell_of):
+        rows = np.flatnonzero((cell_of == c) & ((ids < CENTROID_BASE) | (ids >= CENTROID_BASE + NCELLS)))
+        vecs[rows] = vecs[np.roll(rows, 1)]
+    moved = tmp_path / "moved"
+    moved.mkdir()
+    emb = pa.array(vecs.tolist(), pa.list_(pa.float32()))
+    papq.write_table(pa.table({"vec_id": ids, "embedding": emb}), moved / "embeddings.parquet")
+    assert build_ivf_index(spark, str(moved), d)["cell_rows"] == old_counts
+    after = query_ivf_index(spark, d, str(moved)).collect()
+    assert sorted(after) != sorted(before)
+    qids = ids[ids < IVF_QUERIES]
+    _assert_matches_numpy(after, _ivf_numpy(ids, vecs.astype(np.float64), qids, vecs[ids < IVF_QUERIES])[1])
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_search_core_equals_dataframe_wrapper(spark, ivf_index, tmp_path, monkeypatch, path):
+    """`query_ivf_index` (a float32 query set through the search core)
+    returns the rows of `search_ivf_index` on the same set passed as an
+    array<double> DataFrame, on both rerank paths. On both, a zero-norm
+    query, a duplicate id or a wrong dimension raises before any Spark job
+    and before any cell is read."""
+    import shutil
+
+    import numpy as np
+
+    from iris_project_database_refresh_spark.operators.advanced import IVF_QUERIES
+    from iris_project_database_refresh_spark.sinks import vector_index
+    from iris_project_database_refresh_spark.sinks.vector_index import IvfIndex, query_ivf_index, search_ivf_index
+
+    if path == "spark":
+        monkeypatch.setattr(vector_index, "DRIVER_SLICE_BYTES", 0)
+    ids, vecs = _corpus()
+    qids, qv = ids[ids < IVF_QUERIES], vecs[ids < IVF_QUERIES]
+    core = sorted(query_ivf_index(spark, ivf_index, SF_CORRECT).collect())
+    assert core and core == sorted(search_ivf_index(spark, ivf_index, _local_queries(spark, qids, qv)).collect())
+
+    fresh = tmp_path / "fresh"  # a new directory: its handle holds no cell yet
+    shutil.copytree(ivf_index, fresh)
+    index = IvfIndex.open(str(fresh))
+    zero = qv.copy()
+    zero[1] = 0.0
+    bad = [
+        (qids, zero, r"query.*\[1\]"),
+        (np.array([2, 2, 3, 4, 5]), qv, "duplicate query ids"),
+        (qids, qv[:, :-1], "the index holds"),
+    ]
+    for bad_ids, bad_qv, match in bad:
+        with job_group(spark, f"ivf-core-bad-{path}") as jobs, _index_reads(monkeypatch) as paths:
+            with pytest.raises(ValueError, match=match):
+                index.search(spark, bad_ids, bad_qv)
+        assert jobs == [] and paths == []
 
 
 def test_search_ivf_index_rejects_zero_norm_vectors_on_driver(spark, ivf_index, tmp_path):

@@ -23,6 +23,23 @@ def test_pgvector_literal_matches_reference_format(spark):
     # stage_05_csv_export.py:444 — "[x,y]" with str(float()), '' for NULL/empty
     assert got == ["[1.5,2.0,-0.25]", "", ""]
 
+    # the array cast renders every element as the former per-element
+    # lambda did: float32 widening, NaN, infinities, -0.0, a null element
+    # (skipped by array_join) and exponent forms
+    def per_element(e):
+        joined = F.array_join(F.transform(e, lambda x: x.cast("double").cast("string")), ",")
+        return F.when(e.isNull() | (F.size(e) == 0), F.lit("")).otherwise(F.concat(F.lit("["), joined, F.lit("]")))
+
+    inf = float("inf")
+    for kind in ("double", "float"):
+        edge = spark.createDataFrame(
+            [([0.1, float("nan"), inf, -inf, -0.0, None, 1e-7, 1e21, -3.5e-12],), ([1.0, None],), (None,), ([],)],
+            f"embedding: array<{kind}>",
+        )
+        rows = edge.select(pgvector_literal(F.col("embedding")), per_element(F.col("embedding"))).collect()
+        assert [r[0] for r in rows] == [r[1] for r in rows]
+        assert "NaN" in rows[0][0] and "-Infinity" in rows[0][0] and "E" in rows[0][0]
+
 
 def test_export_chunks_csv_roundtrip(spark, tmp_path):
     emb = load_table(spark, SF_CORRECT, "embeddings")
