@@ -177,28 +177,29 @@ def merge_from_delta(master: DataFrame, delta: DataFrame) -> DataFrame:
     keep their ids; new and updated files are (re)appended with ids
     max(id)+1, max(id)+2, … ordered by file_name (stage4 get_next_id
     semantics). ``delta`` is `delta_from_documents`' output, as computed
-    or as read back once written."""
+    or as read back once written.
+
+    Building it runs the numbering's range exchange and one collected
+    aggregate (the per-partition counts and the prior max id); the
+    write then runs the survivors' broadcast and the rows."""
     survivors = master.join(
         delta.where(F.col("needs_delete") == 1).select("file_name"), "file_name", "left_anti"
     ).select("id", "file_name", "file_path", "file_size", "document_source", F.lit("kept").alias("row_status"))
-    # next-id as a broadcast 1-row aggregate cross-joined in, so the
-    # whole merge stays one lazy plan (no driver-side scalar collect,
-    # no extra job per invocation).
-    next_id = master.agg((F.coalesce(F.max("id"), F.lit(0)) + 1).alias("_start"))
     # distributed sequential numbering — a row_number() over a global
     # Window would drag the whole incoming batch through one task;
     # functions/distributed.sequential_ids numbers one pinned range
-    # exchange and adds broadcast per-partition offsets: identical ids,
-    # every stage parallel.
+    # exchange by per-partition offsets computed on the driver, and
+    # takes max(id) from the prior master in the same collected
+    # aggregate: identical ids, no stage funnels the batch.
     from ..functions.distributed import sequential_ids
 
     incoming = sequential_ids(
-        delta.where(F.col("needs_process") == 1)
-        .select("file_name", "file_path", "file_size", "document_source")
-        .crossJoin(F.broadcast(next_id)),
+        delta.where(F.col("needs_process") == 1).select(
+            "file_name", "file_path", "file_size", "document_source"
+        ),
         "file_name",
         id_col="id",
-        start_col="_start",
+        after=master.select("id"),
     ).select(
         "id", "file_name", "file_path", "file_size", "document_source",
         F.lit("appended").alias("row_status"),
@@ -732,8 +733,9 @@ def catalog_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin the merged master (narrow 2-column projection): the audit
     # references it three times (missing / extra / stats) and each
     # unpinned reference re-derives the merge — the full-outer delta
-    # join behind the survivors plus sequential_ids' offset join (its
-    # range exchange is pinned inside sequential_ids and runs once).
+    # join behind the survivors plus the numbered rows (sequential_ids
+    # pins its range exchange and collects its offsets once, when the
+    # merge is built).
     # _snapshot stays unpinned: it is a single projected scan, where a
     # pin measures slower than Spark's own exchange reuse.
     docs = load_table(spark, sf_dir, "documents")

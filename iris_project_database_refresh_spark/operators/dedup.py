@@ -1801,6 +1801,19 @@ def dedup_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     old per-arm aggregate: n_candidates 0, n_verified/precision NULL.
     """
     sh = _with_hashes(_corpus(spark, sf_dir))
+    # Invariant: every document has at least one shingle, so no
+    # signature is NULL. A NULL one (a NULL text) would drop out of the
+    # concat_ws band keys but not out of the sig-equality membership
+    # below, and the counts would silently diverge from the oracle's;
+    # fail on it instead, naming the document. (A blank text already
+    # fails inside the shingle expression, at element_at.)
+    sh = sh.select(
+        "doc_id",
+        F.expr(
+            "CASE WHEN size(hashes) > 0 THEN hashes ELSE raise_error(concat("
+            "'dedup_band_sweep: document ', doc_id, ' has no shingles, so its MinHash signature is NULL')) END"
+        ).alias("hashes"),
+    )
     sigs = sh.select("doc_id", "hashes", *_minhash_sigs()).localCheckpoint(eager=False)
     n_wide, r_wide = SWEEP_CONFIGS[0]
     band_cols = [

@@ -22,7 +22,7 @@ DuckDB oracle unrolls the three rounds as CTEs with `//`.
 Scale: per round, one shuffle of the edge list on dst + one broadcast-
 able node join; edge state is narrow (src, dst, outdeg). At 100 TB the
 same loop runs with edges bucketed by dst so every round reuses one
-co-located layout (sources/bucketed.py); rounds are bounded by the
+co-located layout (`bucketBy` at write time); rounds are bounded by the
 damping horizon, not data size.
 """
 

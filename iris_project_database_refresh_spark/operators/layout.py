@@ -195,8 +195,8 @@ COMPACT_TARGET = 16384  # target compacted-file size (bytes)
 
 def file_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted per-source file manifest: one file per document, sized
-    by its utf-8 byte length — the metadata shape `sinks/shards.py`
-    writes for real and a lakehouse table format keeps per file."""
+    by its utf-8 byte length — the metadata shape a lakehouse table
+    format keeps per file."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         F.col("source"),

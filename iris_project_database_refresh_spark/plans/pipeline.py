@@ -26,8 +26,10 @@ A process-monitor log in the spirit of the reference's
 `process_monitor_logs` table (`database-schema.sql:258-280`: run_uuid,
 stage_name, start/end, duration_ms, status, decision_details) is
 written whether or not the stages succeed, so a failed cycle leaves its
-`Failure` row on disk. The manifest is written last, only after every
-stage has succeeded: its presence marks a completed cycle.
+`Failure` row on disk. The driver holds those few rows and writes them
+itself with pyarrow (`StageMonitor.write`), so the log needs no working
+Spark job. The manifest is written last, only after every stage has
+succeeded: its presence marks a completed cycle.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,11 +97,17 @@ class StageMonitor:
                 )
             )
 
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        # From an Arrow table the rows are decoded in the JVM; a list of
-        # tuples would start a Python worker to unpickle six rows.
+    def write(self, path: str) -> int:
+        """Write the rows so far as ``path/part-00000.parquet`` and return
+        their count. pyarrow writes them from the driver, so a flush
+        needs no Spark job; the file is written under a hidden name and
+        renamed into place, so a reader never sees a partial log."""
+        os.makedirs(path, exist_ok=True)
         table = pa.Table.from_pylist([dict(zip(MONITOR_SCHEMA.names, r)) for r in self.rows], MONITOR_SCHEMA)
-        return spark.createDataFrame(table)
+        tmp = os.path.join(path, ".part-00000.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+        return table.num_rows
 
 
 def _source_list(_df: DataFrame):
@@ -147,7 +156,8 @@ def run_refresh(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int
         )
         mon.run("validation", write, "validation", lambda: catalog.validate_master(master), _source_list)
     finally:
-        mon.run("monitor_flush", write, "monitor_logs", lambda: mon.to_df(spark).coalesce(1))
+        logs = mon.run("monitor_flush", mon.write, os.path.join(out_dir, "monitor_logs"))
+        observed["monitor_logs"] = {"rows": logs}
 
     # IT-handoff manifest next to the stage outputs
     # (`stage5_output_final_csv.py:431` generate_deployment_metadata).

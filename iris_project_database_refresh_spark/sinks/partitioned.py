@@ -11,8 +11,7 @@ the partitions the delta lands in:
 * `write_partitioned` — hive-style ``partitionBy`` parquet layout
   (e.g. ``day=2024-01-05/``). Each partition's data is coalesced
   through ``repartition(partition cols)`` first so one task owns one
-  partition directory (no small-file explosion — the same concern
-  `shards.py` handles for hash layout).
+  partition directory (no small-file explosion).
 * `read_pruned` — reads with a partition predicate; the scan's
   ``PartitionFilters`` prune directories BEFORE any IO (asserted in
   tests) — the mechanism that makes a 100 TB table behave like the

@@ -71,7 +71,7 @@ def _read_manifest(table_dir: str, version: int) -> dict:
 
 def _write_files(df: DataFrame, table_dir: str, version: int, partition_col: str | None):
     """Write immutable data files for this commit; one file per
-    partition value when partitioned (the shards.py small-file rule),
+    partition value when partitioned (no small-file explosion),
     else one file per task. Returns file entries with row counts."""
     staging = os.path.join(_data_dir(table_dir), f".staging-{uuid.uuid4().hex}")
     if partition_col:

@@ -111,3 +111,37 @@ def test_dual_embedding_refresh_column_granular(spark):
         assert r.n_embed_calls == int(r.doc_id % 5 == 1) + int(r.doc_id % 7 == 2)
     # the cycle saved 2N - Σcalls embed calls vs a column-blind refresh
     assert sum(r.n_embed_calls for r in rows) < 2 * len(rows)
+
+
+def _docs(spark):
+    from iris_project_database_refresh_spark.sources.tables import load_table
+
+    return load_table(spark, SF_CORRECT, "documents")
+
+
+def test_merge_with_nothing_to_process_keeps_the_survivors(spark):
+    """An empty process list (only deletions): no row is appended and
+    every surviving row keeps its id."""
+    import pyspark.sql.functions as F
+
+    docs = _docs(spark)
+    master = catalog._master(docs)
+    delta = catalog.delta_from_documents(docs, master).where(F.col("needs_process") == 0)
+    deleted = {r.file_name for r in delta.where(F.col("needs_delete") == 1).collect()}
+    assert deleted
+    merged = catalog.merge_from_delta(master, delta).collect()
+    assert {r.row_status for r in merged} == {"kept"}
+    assert {(r.id, r.file_name) for r in merged} == {
+        (r.id, r.file_name) for r in master.collect() if r.file_name not in deleted
+    }
+
+
+def test_merge_into_an_empty_master_numbers_from_one(spark):
+    """With no prior master every file is new, and the ids run 1, 2, …
+    in file_name order."""
+    docs = _docs(spark)
+    master = catalog._master(docs).limit(0)
+    merged = catalog.merge_from_delta(master, catalog.delta_from_documents(docs, master)).collect()
+    assert {r.row_status for r in merged} == {"appended"}
+    assert [r.file_name for r in sorted(merged, key=lambda r: r.id)] == sorted(r.file_name for r in merged)
+    assert sorted(r.id for r in merged) == list(range(1, docs.count() + 1))

@@ -229,3 +229,19 @@ def test_minhash_tables_dial_invariants(spark):
     assert rows[-1].recall_bp == 10000
     production = dedup.dedup_minhash_lsh(spark, SF_CORRECT).count()
     assert rows[-1].n_verified == production
+
+
+def test_band_sweep_rejects_a_document_without_shingles(spark, tmp_path):
+    """The sweep's counts rest on every document having a shingle; a
+    document without one (a NULL text) fails the query, naming it,
+    instead of silently skewing the candidate counts."""
+    import pyspark.sql.functions as F
+
+    from iris_project_database_refresh_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_CORRECT, "documents").orderBy("doc_id").limit(20)
+    bad = docs.limit(1).withColumn("doc_id", F.lit(4242).cast(docs.schema["doc_id"].dataType))
+    bad = bad.withColumn("text", F.lit(None).cast("string"))
+    docs.unionByName(bad).write.parquet(str(tmp_path / "documents.parquet"))
+    with pytest.raises(Exception, match="document 4242 has no shingles"):
+        dedup.dedup_band_sweep(spark, str(tmp_path)).collect()

@@ -223,3 +223,112 @@ def test_global_ordered_matches_window_functions(spark):
     # double sums: the prefix offsets regroup the additions
     assert all(math.isclose(ranked[k].cs, r.cs, abs_tol=1e-6) for k, r in want.items())
     assert all(math.isclose(offs[k], r.off, abs_tol=1e-6) for k, r in want.items())
+
+
+# --- the collected moments: empty input, several range partitions ------------
+
+ORDERED_DTYPES = [
+    ("id", "int"), ("k", "double"), ("x", "double"), ("n", "bigint"),
+    ("cnt", "bigint"), ("rn", "bigint"), ("cs_x", "double"), ("cs_n", "bigint"),
+    ("cm_x", "double"), ("cm_n", "bigint"),
+]
+SCHEMA = "id int, k double, x double, n bigint"
+
+
+def _all_stats(df):
+    from iris_project_database_refresh_spark.functions.distributed import global_ordered
+
+    return global_ordered(
+        df, ["k"], rank_col="rn", count_col="cnt",
+        cumsum_cols={"cs_x": "x", "cs_n": "n"}, cummax_excl_cols={"cm_x": "x", "cm_n": "n"},
+    )
+
+
+def test_global_ordered_on_empty_input(spark):
+    from iris_project_database_refresh_spark.functions.distributed import (
+        global_cumsum,
+        global_ntile,
+    )
+
+    empty = spark.createDataFrame([], SCHEMA)
+    got = _all_stats(empty)
+    assert got.dtypes == ORDERED_DTYPES
+    assert got.collect() == []
+    assert global_ntile(empty, ["k"], 4, tile_col="t").dtypes[-1] == ("t", "int")
+    assert global_cumsum(empty, "k", "n", out_col="off").dtypes[-1] == ("off", "bigint")
+    seq = sequential_ids(empty, "k", id_col="sid", after=spark.createDataFrame([(7,)], "id bigint"))
+    assert seq.dtypes[-1] == ("sid", "bigint") and seq.collect() == []
+
+
+def test_global_ordered_across_range_partitions_with_an_empty_one(spark):
+    """Several range partitions, the last one empty: the order key ends
+    in a run of 1,000 ties, which the range partitioner's sampled bounds
+    end on, so nothing is left for the partition above them. Ranks,
+    ntiles, running sums (exact doubles, ±Infinity and NaN among them)
+    and exclusive running maxima must equal the single-task window
+    functions. Within the tied run the row order is arbitrary, but the
+    value columns are constant there, so each rank's row of stats is
+    determined."""
+    from pyspark.sql import Window
+
+    from iris_project_database_refresh_spark.functions.distributed import global_ntile
+
+    special = {600: float("inf"), 800: float("-inf"), 900: float("nan")}
+    rows = [(i, float(i), special.get(i, (i % 7) * 0.5 - 1.0), i % 13) for i in range(1000)]
+    rows += [(1000 + i, 5000.0, 2.0, 5) for i in range(1000)]
+    conf = {"spark.sql.shuffle.partitions": "8", "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    before = {key: spark.conf.get(key) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        df = spark.createDataFrame(rows, SCHEMA).repartition(4, "id")
+        sizes = df.repartitionByRange("k").rdd.glom().map(len).collect()
+        assert len(sizes) > 2 and sizes[-1] == 0 and min(sizes[:-1]) > 0, sizes
+
+        got = _all_stats(df)
+        tiles = {r.id: r.t for r in global_ntile(df, ["k"], 7, tile_col="t").collect()}
+        w = Window.orderBy("k")
+        want = df.select(
+            "id",
+            F.lit(len(rows)).cast("bigint").alias("cnt"),
+            F.row_number().over(w).alias("rn"),
+            F.ntile(7).over(w).alias("t"),
+            *[F.sum(c).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(f"cs_{c}") for c in "xn"],
+            *[F.max(c).over(w.rowsBetween(Window.unboundedPreceding, -1)).alias(f"cm_{c}") for c in "xn"],
+        )
+        stats = ["cnt", "cs_x", "cs_n", "cm_x", "cm_n"]
+        mine = sorted((r.rn, tiles[r.id], *(repr(r[c]) for c in stats)) for r in got.collect())
+        theirs = sorted((r.rn, r.t, *(repr(r[c]) for c in stats)) for r in want.collect())
+    finally:
+        for key, value in before.items():
+            spark.conf.set(key, value)
+    assert got.dtypes == ORDERED_DTYPES
+    assert mine == theirs
+    assert {s for _, _, _, s, *_ in mine} >= {"inf", "nan"}
+
+
+def test_offset_lookup_renders_doubles_exactly(spark):
+    """The collected offsets go back to Spark as SQL literals; every
+    double must come back bit for bit."""
+    import struct
+
+    from iris_project_database_refresh_spark.functions.distributed import _by_pid
+
+    values = [0.1, 1 / 3, 1e-7, 5e-324, -2.5e300, -0.0, float("inf"), float("-inf"), float("nan"), None]
+    pids = spark.range(len(values)).select(F.col("id").cast("int").alias("_pid"))
+    got = {r._pid: r.v for r in pids.select("_pid", _by_pid(values, "double").alias("v")).collect()}
+    bits = lambda v: None if v is None else struct.pack(">d", v)  # noqa: E731
+    assert [bits(got[p]) for p in range(len(values))] == [bits(v) for v in values]
+
+
+def test_sequential_ids_continue_after_a_frame(spark):
+    """ids continue from the max of ``after``, and start at 1 (or
+    ``start``) when ``after`` is empty."""
+    df = spark.createDataFrame([(k,) for k in "dacb"], "k string")
+    ids = lambda out: {r.k: r.sid for r in out.collect()}  # noqa: E731
+    assert ids(sequential_ids(df, "k", id_col="sid", after=spark.createDataFrame([], "id int"))) == {
+        "a": 1, "b": 2, "c": 3, "d": 4,
+    }
+    after = spark.createDataFrame([(3,), (41,), (None,)], "id int")
+    assert ids(sequential_ids(df, "k", id_col="sid", after=after)) == {"a": 42, "b": 43, "c": 44, "d": 45}
+    assert ids(sequential_ids(df, "k", id_col="sid", start=10)) == {"a": 10, "b": 11, "c": 12, "d": 13}

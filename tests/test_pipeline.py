@@ -2,12 +2,14 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
 from iris_project_database_refresh_spark.operators import catalog, chunking, embeddings
-from iris_project_database_refresh_spark.plans.pipeline import run_refresh
+from iris_project_database_refresh_spark.plans.pipeline import MONITOR_SCHEMA, StageMonitor, run_refresh
 from iris_project_database_refresh_spark.sinks.deployment import dataframe_content_hash
 from iris_project_database_refresh_spark.sources.formats import (
     read_csv,
@@ -130,13 +132,61 @@ def test_unreadable_source_leaves_failure_record(spark, tmp_path):
     assert glob.glob(out + "/deployment_metadata_*.json") == []
 
 
-def test_warm_refresh_cycle_runs_at_most_twenty_jobs(spark, refreshed, tmp_path):
+def test_warm_refresh_cycle_runs_at_most_sixteen_jobs(spark, refreshed, tmp_path):
     """A warm cycle reads ``documents`` once, runs each stage as its one
     write, and takes the manifest's hashes, counts and sources from the
     writes' observations rather than from re-scans."""
     with job_group(spark, "refresh-cycle-jobs") as jobs:
         run_refresh(spark, SF_CORRECT, str(tmp_path / "refresh"))
-    assert 0 < len(jobs) <= 20, jobs
+    assert 0 < len(jobs) <= 16, jobs
+
+
+def test_warm_refresh_stage_job_budgets(spark, refreshed, tmp_path, monkeypatch):
+    """The merge numbers its appended rows from one collected aggregate
+    (range sample, pinned exchange, the aggregate's two jobs, the
+    survivors' broadcast, the write), and the monitor log is written by
+    the driver without a Spark job."""
+    run = StageMonitor.run
+    jobs: dict[str, list[int]] = {}
+
+    def counted(self, stage, *args, **kwargs):
+        with job_group(spark, f"refresh-stage-{stage}") as jobs[stage]:
+            return run(self, stage, *args, **kwargs)
+
+    monkeypatch.setattr(StageMonitor, "run", counted)
+    run_refresh(spark, SF_CORRECT, str(tmp_path / "refresh"))
+    assert set(jobs) == STAGES | {"monitor_flush"}
+    assert 0 < len(jobs["catalog_merge"]) <= 6, jobs
+    assert jobs["monitor_flush"] == [], jobs
+
+
+def test_failed_stage_leaves_one_readable_monitor_file(spark, tmp_path, monkeypatch):
+    """The driver-written log replaces the previous cycle's in place: one
+    parquet file, no temporary left, the reference's schema, and the
+    failing stage's ``Failure`` row."""
+    out = str(tmp_path / "refresh")
+    run_refresh(spark, SF_CORRECT, out)
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("merge exploded")
+
+    monkeypatch.setattr(catalog, "merge_from_delta", boom)
+    with pytest.raises(RuntimeError, match="merge exploded"):
+        run_refresh(spark, SF_CORRECT, out)
+
+    assert os.listdir(out + "/monitor_logs") == ["part-00000.parquet"]
+    table = pq.read_table(out + "/monitor_logs/part-00000.parquet")
+    assert table.schema.equals(MONITOR_SCHEMA)
+    logs = spark.read.parquet(out + "/monitor_logs")
+    assert logs.dtypes == [
+        ("run_uuid", "string"), ("model_name", "string"), ("stage_name", "string"),
+        ("duration_ms", "bigint"), ("status", "string"), ("decision_details", "string"),
+    ]
+    rows = {r.stage_name: r for r in logs.collect()}
+    assert set(rows) == STAGES - {"validation"}
+    assert rows["catalog_merge"].status == "Failure"
+    assert "merge exploded" in rows["catalog_merge"].decision_details
+    assert all(r.status == "Success" for name, r in rows.items() if name != "catalog_merge")
 
 
 def test_refresh_of_empty_corpus(spark, tmp_path):
