@@ -184,7 +184,7 @@ _TH_SQL = "list_transform(list_filter(string_split_regex(text, '\\s+'), t -> t <
 
 # 32-bit rolling shingle hash (ngram jaccard + minhash space)
 _SH32_EXPR = f"""
-CASE WHEN size(th) < {SHINGLE} THEN array(coalesce(element_at(th, 1), 0L))
+CASE WHEN size(th) < {SHINGLE} THEN array(coalesce(try_element_at(th, 1), 0L))
      ELSE array_distinct(transform(sequence(1, size(th) - {SHINGLE - 1}),
           i -> ((element_at(th, i) * 31 + element_at(th, i + 1)) * 31 + element_at(th, i + 2)) % {_M32}))
 END
@@ -200,7 +200,7 @@ END
 # position, distinct multipliers) packed side by side — all products
 # bounded by 2^52, no overflow.
 _SH60_EXPR = f"""
-CASE WHEN size(th) < {SHINGLE} THEN array(coalesce(element_at(th, 1), 0L))
+CASE WHEN size(th) < {SHINGLE} THEN array(coalesce(try_element_at(th, 1), 0L))
      ELSE array_distinct(transform(sequence(1, size(th) - {SHINGLE - 1}),
           i -> (element_at(th, i) * 13 + 7) % {_LANE}
              + ((element_at(th, i + 1) * 31 + 5) % {_LANE}) * {_LANE}

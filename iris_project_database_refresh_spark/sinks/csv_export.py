@@ -15,13 +15,22 @@ from pyspark.sql import functions as F
 
 
 def pgvector_literal(embedding: Column) -> Column:
-    """array<numeric> → pgvector text literal '[x1,x2,…]'; NULL/empty → ''.
+    """array<float|double> → pgvector text literal '[x1,x2,…]'; NULL/empty → ''.
 
-    Floats are rendered via double cast (matches the reference's
-    str(float(x)) on finite values). The elements are cast as one array,
-    not by a per-element lambda, which costs a dozen py4j calls to build.
+    Each element renders at the precision of its own type, in Java's
+    notation: a float32 as `Float.toString` (`0.3`, `1.0E-5`, `1.4E-45`,
+    `-0.0`, `NaN`, `Infinity`), a double as `Double.toString`. That is
+    the shortest text that parses back to the element's own bits, so a
+    float32 embedding round-trips to the float4 pgvector stores without
+    the ~18 extra digits a widening to double would print (`0.3f` as
+    `0.30000001192092896`). Exponent forms are Java's (`1.0E-5`), not
+    Python's `str(float(x))` (`1e-05`); pgvector parses both. Integer
+    and decimal arrays print in their own plain form (`1`, not `1.0`);
+    no caller passes them. Null elements are skipped by `array_join`.
+    The elements are cast as one array, not by a per-element lambda,
+    which costs a dozen py4j calls to build.
     """
-    joined = F.array_join(embedding.cast("array<double>").cast("array<string>"), ",")
+    joined = F.array_join(embedding.cast("array<string>"), ",")
     return F.when(
         embedding.isNull() | (F.size(embedding) == 0), F.lit("")
     ).otherwise(F.concat(F.lit("["), joined, F.lit("]")))

@@ -245,3 +245,23 @@ def test_band_sweep_rejects_a_document_without_shingles(spark, tmp_path):
     docs.unionByName(bad).write.parquet(str(tmp_path / "documents.parquet"))
     with pytest.raises(Exception, match="document 4242 has no shingles"):
         dedup.dedup_band_sweep(spark, str(tmp_path)).collect()
+
+
+@pytest.mark.parametrize("expr", ["_SH32_EXPR", "_SH60_EXPR"])
+def test_blank_document_gets_the_zero_shingle(spark, expr):
+    """A document of no tokens ('' or whitespace) hashes to the one
+    shingle [0], as the DuckDB mirror gives it, instead of failing the
+    query on an out-of-range element_at under ANSI mode."""
+    import duckdb
+
+    sql = getattr(dedup, expr.replace("_EXPR", "_SQL"))
+    con = duckdb.connect()
+    for text in ("", "  ", "one two"):
+        corpus = spark.createDataFrame([(7, text)], "doc_id long, text string")
+        got = [r.hashes for r in dedup._with_hashes(corpus, getattr(dedup, expr)).collect()]
+        con.execute("CREATE OR REPLACE TABLE corpus AS SELECT 7::BIGINT AS doc_id, ?::VARCHAR AS text", [text])
+        want = [r[1] for r in con.execute(f"WITH {dedup._hashes_cte(sql).strip()} SELECT * FROM sh").fetchall()]
+        assert got == want
+        if not text.strip():
+            assert got == [[0]]
+    con.close()

@@ -3,6 +3,8 @@ from __future__ import annotations
 import glob
 import os
 
+import numpy as np
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -23,22 +25,62 @@ def test_pgvector_literal_matches_reference_format(spark):
     # stage_05_csv_export.py:444 — "[x,y]" with str(float()), '' for NULL/empty
     assert got == ["[1.5,2.0,-0.25]", "", ""]
 
-    # the array cast renders every element as the former per-element
-    # lambda did: float32 widening, NaN, infinities, -0.0, a null element
-    # (skipped by array_join) and exponent forms
+    # the array cast renders every double as the former per-element
+    # lambda did: NaN, infinities, -0.0, a null element (skipped by
+    # array_join) and exponent forms
     def per_element(e):
         joined = F.array_join(F.transform(e, lambda x: x.cast("double").cast("string")), ",")
         return F.when(e.isNull() | (F.size(e) == 0), F.lit("")).otherwise(F.concat(F.lit("["), joined, F.lit("]")))
 
     inf = float("inf")
-    for kind in ("double", "float"):
-        edge = spark.createDataFrame(
-            [([0.1, float("nan"), inf, -inf, -0.0, None, 1e-7, 1e21, -3.5e-12],), ([1.0, None],), (None,), ([],)],
-            f"embedding: array<{kind}>",
-        )
-        rows = edge.select(pgvector_literal(F.col("embedding")), per_element(F.col("embedding"))).collect()
-        assert [r[0] for r in rows] == [r[1] for r in rows]
-        assert "NaN" in rows[0][0] and "-Infinity" in rows[0][0] and "E" in rows[0][0]
+    edge = spark.createDataFrame(
+        [([0.1, float("nan"), inf, -inf, -0.0, None, 1e-7, 1e21, -3.5e-12],), ([1.0, None],), (None,), ([],)],
+        "embedding: array<double>",
+    )
+    rows = edge.select(pgvector_literal(F.col("embedding")), per_element(F.col("embedding"))).collect()
+    assert [r[0] for r in rows] == [r[1] for r in rows]
+    assert "NaN" in rows[0][0] and "-Infinity" in rows[0][0] and "E" in rows[0][0]
+
+
+def _parse_float32(literal: str) -> np.ndarray:
+    return np.array([np.float32(x) for x in literal[1:-1].split(",")], dtype=np.float32)
+
+
+def _same_bits(a: np.ndarray, b: np.ndarray) -> bool:
+    return a.shape == b.shape and bool((a.view(np.uint32) == b.view(np.uint32)).all())
+
+
+def test_pgvector_literal_float32_round_trips_bit_exact(spark):
+    """A float32 element renders at its own precision (Java's
+    Float.toString), and every element parses back to the source's
+    exact bits: the float4 pgvector stores."""
+    rng = np.random.default_rng(20261019)
+    normals = rng.standard_normal(2000).astype(np.float32)
+    edges = np.array(
+        [1.4e-45, -1.4e-45, 1.1754942e-38, 3e-40, 3.4028235e38, -3.4028235e38, -0.0, 0.0, 1e-7, 0.3, 1e-5, 1e21],
+        dtype=np.float32,
+    )
+    scaled = (normals[:200] * np.float32(1e-30)).astype(np.float32)
+    vectors = [normals, edges, scaled]
+    lits = [
+        r[0]
+        for r in spark.createDataFrame([(v.tolist(),) for v in vectors], "embedding: array<float>")
+        .select(pgvector_literal(F.col("embedding")))
+        .collect()
+    ]
+    for v, lit in zip(vectors, lits):
+        assert _same_bits(_parse_float32(lit), v)
+    assert lits[1].split(",")[:2] == ["[1.4E-45", "-1.4E-45"] and "0.3" in lits[1].split(",")
+    # a 2000-dim row: about 21,800 characters, where widening each
+    # element to double printed about 39,000
+    assert len(lits[0]) <= 32_001
+
+    # NaN, infinities, null elements and NULL/empty arrays render as before
+    inf = float("inf")
+    special = spark.createDataFrame(
+        [([float("nan"), inf, None, -inf],), ([1.0, None],), (None,), ([],)], "embedding: array<float>"
+    ).select(pgvector_literal(F.col("embedding")))
+    assert [r[0] for r in special.collect()] == ["[NaN,Infinity,-Infinity]", "[1.0]", "", ""]
 
 
 def test_export_chunks_csv_roundtrip(spark, tmp_path):
@@ -55,25 +97,42 @@ def test_export_chunks_csv_roundtrip(spark, tmp_path):
     export_chunks_csv(chunks, out)
     files = glob.glob(os.path.join(out, "*.csv"))
     assert files
-    back = spark.read.option("header", True).csv(out)
-    assert back.count() == chunks.count()
-    emb_lits = [r.embedding_literal for r in back.limit(5).collect()]
-    assert all(s.startswith("[") and s.endswith("]") for s in emb_lits)
+    back = spark.read.option("header", True).csv(out).collect()
+    assert len(back) == chunks.count()
+    # every row's literal parses back to its document's embedding, bit for bit
+    emb_tbl = pq.read_table(os.path.join(SF_CORRECT, "embeddings.parquet"), columns=["vec_id", "embedding"])
+    want = {
+        vid: np.asarray(e, dtype=np.float32)
+        for vid, e in zip(emb_tbl.column("vec_id").to_pylist(), emb_tbl.column("embedding").to_pylist())
+    }
+    for r in back:
+        assert _same_bits(_parse_float32(r.embedding_literal), want[int(r.document_id.removeprefix("DOC_"))])
 
 
 def test_jdbc_sink_sql_generation():
     sink = JdbcUpsertSink(url="jdbc:postgresql://db/x", table="iris_semantic_search", key_columns=("document_id",))
-    assert sink.delete_sql() == (
+    staging = sink.staging_name()
+    assert staging.startswith("iris_semantic_search_stg_") and len(staging) == len("iris_semantic_search_stg_") + 12
+    assert staging != sink.staging_name()
+    assert sink.lock_sql() == "LOCK TABLE iris_semantic_search IN EXCLUSIVE MODE"
+    assert sink.delete_sql("st") == (
         'DELETE FROM iris_semantic_search WHERE EXISTS '
-        '(SELECT 1 FROM iris_semantic_search_staging s '
+        '(SELECT 1 FROM st s '
         'WHERE s."document_id" = iris_semantic_search."document_id")'
     )
-    assert sink.insert_sql(["document_id", "chunk_content"]).startswith(
-        'INSERT INTO iris_semantic_search ("document_id", "chunk_content") SELECT'
+    assert sink.insert_sql("st", ["document_id", "chunk_content"]) == (
+        'INSERT INTO iris_semantic_search ("document_id", "chunk_content") '
+        'SELECT "document_id", "chunk_content" FROM st'
     )
+    assert sink.duplicate_keys_sql("st") == 'SELECT "document_id" FROM st GROUP BY "document_id" HAVING count(*) > 1'
     assert sink.truncate_sql() == "TRUNCATE TABLE iris_semantic_search"
     with pytest.raises(ValueError):
         JdbcUpsertSink(url="u", table="t", key_columns=())
+    # PostgreSQL would truncate a staging name over 63 characters
+    JdbcUpsertSink(url="u", table="t" * 46, key_columns=("k",))
+    JdbcUpsertSink(url="u", table="public." + "t" * 46, key_columns=("k",))
+    with pytest.raises(ValueError, match="truncates identifiers longer than 63"):
+        JdbcUpsertSink(url="u", table="t" * 47, key_columns=("k",))
 
 
 def test_snapshot_directory(spark, tmp_path):

@@ -68,6 +68,12 @@ def _read_target(spark, url: str, table: str) -> dict:
     return {r.doc_id: r.content for r in df.collect()}
 
 
+def _leftover_tables(spark, url: str) -> list[str]:
+    """User tables besides the target: a staging table a write left."""
+    query = "(SELECT tablename FROM sys.systables WHERE tabletype = 'T' AND tablename <> 'TARGET') t"
+    return [r[0] for r in spark.read.options(**DERBY_PROPS).jdbc(url, query).collect()]
+
+
 def test_jdbc_upsert_roundtrip_derby(spark):
     url = _derby_url("upsert_rt")
     _seed_target(spark, url, [(1, "old-1"), (2, "old-2")])
@@ -83,6 +89,7 @@ def test_jdbc_upsert_roundtrip_derby(spark):
     out = sink.write(refresh, mode="full_refresh", num_partitions=1)
     assert out == {"table": "target", "rows": 1}
     assert _read_target(spark, url, "target") == {9: "only"}
+    assert _leftover_tables(spark, url) == []
 
 
 def test_jdbc_upsert_rolls_back_on_failure(spark):
@@ -99,6 +106,13 @@ def test_jdbc_upsert_rolls_back_on_failure(spark):
     with pytest.raises(Exception):
         sink.write(bad, num_partitions=1)
     assert _read_target(spark, url, "target") == {1: "keep-1", 2: "keep-2"}
+    assert _leftover_tables(spark, url) == []
+    # a staging write that fails before creating its table raises its
+    # own error, not the DROP of a table that was never made
+    unstageable = spark.createDataFrame([(2, [1.0])], "doc_id int, v array<float>")
+    with pytest.raises(Exception, match="Can't get JDBC type for array<float>"):
+        sink.write(unstageable, num_partitions=1)
+    assert _read_target(spark, url, "target") == {1: "keep-1", 2: "keep-2"}
 
 
 def test_jdbc_upsert_rejects_duplicate_batch_keys(spark):
@@ -113,6 +127,37 @@ def test_jdbc_upsert_rejects_duplicate_batch_keys(spark):
         with pytest.raises(ValueError, match=r"duplicate key \{'doc_id': 3\}"):
             sink.write(batch, mode=mode, num_partitions=2)
         assert _read_target(spark, url, "target") == {1: "keep-1", 2: "keep-2"}
+    assert _leftover_tables(spark, url) == []
+
+
+def test_jdbc_upsert_concurrent_publishes_do_not_mix(spark):
+    """Two threads publish overlapping batches to one table, several
+    rounds. Each write stages into its own table and the merges run one
+    after another under the target's lock: no key ends up twice, and
+    every overlapping key carries the rows of one batch."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    url = _derby_url("upsert_concurrent")
+    _seed_target(spark, url, [(k, "seed") for k in range(10)])
+    sink = JdbcUpsertSink(url=url, table="target", key_columns=("doc_id",), properties=DERBY_PROPS)
+    batches = [
+        spark.createDataFrame([(k, f"A-{k}") for k in range(0, 30)], "doc_id int, content string"),
+        spark.createDataFrame([(k, f"B-{k}") for k in range(10, 40)], "doc_id int, content string"),
+    ]
+    overlap = range(10, 30)
+    with ThreadPoolExecutor(2) as pool:
+        for _ in range(3):
+            outs = list(pool.map(lambda b: sink.write(b, num_partitions=2), batches))
+            # the second merge of a round always sees all 40 keys
+            assert max(o["rows"] for o in outs) == 40
+            rows = spark.read.options(**DERBY_PROPS).jdbc(url, "target").collect()
+            keys = [r.doc_id for r in rows]
+            assert len(keys) == len(set(keys)) == 40
+            content = {r.doc_id: r.content for r in rows}
+            winners = {content[k].split("-")[0] for k in overlap}
+            assert len(winners) == 1, winners
+            assert all(content[k] == f"A-{k}" for k in range(10)) and all(content[k] == f"B-{k}" for k in range(30, 40))
+    assert _leftover_tables(spark, url) == []
 
 
 def test_jdbc_partitioned_source_roundtrip(spark):
