@@ -28,6 +28,12 @@ aggregate on (key, salt), then final aggregate on key. AQE's skew
 handling covers joins; this covers the groupBy-with-mega-key case
 (e.g. counting by a 'language' column where one language is 90% of a
 100 TB corpus).
+
+`replace_keys`: the delete+insert merge of the reference's staged
+upload (`semantic search/stage_06_database_upload.py`: DELETE the
+batch's keys, INSERT the batch) as one anti-join plus a union, never a
+per-key loop. `catalog.refresh_upsert`, the streaming
+`ParquetUpsertTable` and the copy-on-write `cow_merge` all use it.
 """
 
 from __future__ import annotations
@@ -59,6 +65,13 @@ def sequential_ids(
     """
     out = global_ordered(df, [order_col], rank_col=id_col, after=after)
     return out.withColumn(id_col, F.col(id_col) + F.lit(start - 1))
+
+
+def replace_keys(current: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """``current`` with every row whose ``keys`` appear in ``batch``
+    replaced by the batch: the rows of ``current`` whose key the batch
+    lacks, then every batch row (columns matched by name)."""
+    return current.join(batch.select(*keys), keys, "left_anti").unionByName(batch)
 
 
 def salted_agg(

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.distributed import replace_keys, sequential_ids
 from ..sources.tables import load_table
 
 BASE_TS = "2024-01-01 00:00:00"
@@ -191,8 +192,6 @@ def merge_from_delta(master: DataFrame, delta: DataFrame) -> DataFrame:
     # exchange by per-partition offsets computed on the driver, and
     # takes max(id) from the prior master in the same collected
     # aggregate: identical ids, no stage funnels the batch.
-    from ..functions.distributed import sequential_ids
-
     incoming = sequential_ids(
         delta.where(F.col("needs_process") == 1).select(
             "file_name", "file_path", "file_size", "document_source"
@@ -297,8 +296,7 @@ def refresh_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("v2: "), F.col("text")).alias("content"),
         F.lit(2).alias("version"),
     )
-    kept = target.join(batch.select("document_id"), "document_id", "left_anti")
-    return kept.unionAll(batch).select(
+    return replace_keys(target, batch, ["document_id"]).select(
         "document_id",
         "document_source",
         F.substring("content", 1, 16).alias("content_head"),

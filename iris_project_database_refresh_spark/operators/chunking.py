@@ -4,8 +4,8 @@ Reference parity:
 * `semantic search/stage_03_content_chunking.py:61-63` — Stage3Chunker
   packs 500-750 tokens per chunk (hard max 800). Here the same
   token-window packing runs as a pure Catalyst expression
-  (split → sequence → transform → posexplode); chunk size is a
-  parameter, default scaled to the synthetic corpus.
+  (split → sequence → transform → posexplode); the chunk size is the
+  module constant `CHUNK_TOKENS`, scaled to the synthetic corpus.
 * `semantic search/stage_02_section_processing.py:1075`
   hierarchical_split_sections + 1145 merge_small_sections — coarser
   windows with a breadcrumb hierarchy string
@@ -57,12 +57,12 @@ def _tokenised(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "source", tokens(F.col("text")).alias("toks"))
 
 
-def chunks_from_documents(docs: DataFrame, size: int = CHUNK_TOKENS) -> DataFrame:
-    """Token windows of ``size`` per document of ``docs``."""
+def chunks_from_documents(docs: DataFrame) -> DataFrame:
+    """Token windows of `CHUNK_TOKENS` per document of ``docs``."""
     return _tokenised(docs).select(
         "doc_id",
         "source",
-        F.posexplode(_windows("toks", size)).alias("chunk_number", "window"),
+        F.posexplode(_windows("toks", CHUNK_TOKENS)).alias("chunk_number", "window"),
     ).select(
         "doc_id",
         "source",
@@ -72,8 +72,8 @@ def chunks_from_documents(docs: DataFrame, size: int = CHUNK_TOKENS) -> DataFram
     )
 
 
-def chunk_documents(spark: SparkSession, sf_dir: str, size: int = CHUNK_TOKENS) -> DataFrame:
-    return chunks_from_documents(load_table(spark, sf_dir, "documents"), size)
+def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return chunks_from_documents(load_table(spark, sf_dir, "documents"))
 
 
 CHUNK_SQL = f"""
@@ -92,13 +92,14 @@ FROM expanded
 """
 
 
-def sections_from_documents(docs: DataFrame, size: int = SECTION_TOKENS) -> DataFrame:
-    """Coarse sections with hierarchy breadcrumbs (source > doc > section)."""
+def sections_from_documents(docs: DataFrame) -> DataFrame:
+    """Coarse `SECTION_TOKENS` sections with hierarchy breadcrumbs
+    (source > doc > section)."""
     sec = _tokenised(docs).select(
         "doc_id",
         "source",
         F.size("toks").alias("doc_tokens"),
-        F.posexplode(_windows("toks", size)).alias("idx", "window"),
+        F.posexplode(_windows("toks", SECTION_TOKENS)).alias("idx", "window"),
     )
     return sec.select(
         "doc_id",
@@ -109,12 +110,12 @@ def sections_from_documents(docs: DataFrame, size: int = SECTION_TOKENS) -> Data
         ).alias("hierarchy"),
         F.array_join("window", " ").alias("section_content"),
         F.size("window").cast("bigint").alias("section_tokens"),
-        F.ceil(F.col("doc_tokens") / F.lit(size)).cast("int").alias("n_sections"),
+        F.ceil(F.col("doc_tokens") / F.lit(SECTION_TOKENS)).cast("int").alias("n_sections"),
     )
 
 
-def section_split(spark: SparkSession, sf_dir: str, size: int = SECTION_TOKENS) -> DataFrame:
-    return sections_from_documents(load_table(spark, sf_dir, "documents"), size)
+def section_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sections_from_documents(load_table(spark, sf_dir, "documents"))
 
 
 SECTION_SQL = f"""

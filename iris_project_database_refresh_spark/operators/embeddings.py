@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from ..functions.plan_memo import plan_memo
+from ..functions.text import md5_int32, tokens
 
 EMBED_DIM = 16  # feature-hash embedding dims
 KNN_K = 10
@@ -243,22 +244,15 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _cosine(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 # --- deterministic feature-hash embedding -----------------------------------
 
 def embed_documents(docs: DataFrame) -> DataFrame:
     """Hash each token into one of EMBED_DIM buckets; dims are bucket
     counts. Stands in for stage_04's API embedder with a function both
     engines compute bit-identically (md5-derived bucket)."""
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")
     # hash every token once into its bucket id, THEN count per dim —
     # 16 filters over a small int array instead of 16 md5 passes.
-    buckets = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint") % EMBED_DIM
-    )
+    buckets = F.transform(tokens(F.col("text")), lambda t: md5_int32(t) % EMBED_DIM)
     # The counts as SQL text: one parse, where a Python lambda per dim
     # costs a dozen py4j round trips to build.
     return docs.withColumn("buckets", buckets).selectExpr(

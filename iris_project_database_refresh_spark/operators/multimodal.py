@@ -1018,14 +1018,6 @@ SRT_MAX_CUES = 5
 SRT_CUE_MS = 2000
 
 
-def _srt_timecode(ms_col):
-    h = F.expr(f"{ms_col} div 3600000")
-    m = F.expr(f"({ms_col} div 60000) % 60")
-    s = F.expr(f"({ms_col} div 1000) % 60")
-    ms = F.expr(f"{ms_col} % 1000")
-    return F.format_string("%02d:%02d:%02d,%03d", h.cast("int"), m.cast("int"), s.cast("int"), ms.cast("int"))
-
-
 def subtitles_parse_srt(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 2).select("doc_id", "text")
     toks = F.filter(F.split("text", r"\s+"), lambda t: t != "")

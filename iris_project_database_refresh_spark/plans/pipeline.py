@@ -29,7 +29,10 @@ written whether or not the stages succeed, so a failed cycle leaves its
 `Failure` row on disk. The driver holds those few rows and writes them
 itself with pyarrow (`StageMonitor.write`), so the log needs no working
 Spark job. The manifest is written last, only after every stage has
-succeeded: its presence marks a completed cycle.
+succeeded: its presence marks a completed cycle. Both files are
+committed with `sinks/snapshots.commit_file` (a hidden temporary, then
+one `os.replace`), so a reader or a crash sees a previous file or a
+whole new one, never a torn log or a torn manifest.
 """
 
 from __future__ import annotations
@@ -52,9 +55,11 @@ from ..sinks.deployment import (
     generate_deployment_metadata,
     write_deployment_metadata,
 )
+from ..sinks.snapshots import commit_file
 from ..sources.tables import load_table
 
 
+MODEL_NAME = "iris-spark"  # the monitor log's model_name column
 MONITOR_SCHEMA = pa.schema(
     [
         ("run_uuid", pa.string()),
@@ -70,9 +75,8 @@ MONITOR_SCHEMA = pa.schema(
 class StageMonitor:
     """Collects per-stage timing rows shaped like process_monitor_logs."""
 
-    def __init__(self, model_name: str = "iris-spark") -> None:
+    def __init__(self) -> None:
         self.run_uuid = str(uuid.uuid4())
-        self.model_name = model_name
         self.rows: list[tuple] = []
 
     def run(self, stage_name: str, fn, *args, **kwargs):
@@ -89,7 +93,7 @@ class StageMonitor:
             self.rows.append(
                 (
                     self.run_uuid,
-                    self.model_name,
+                    MODEL_NAME,
                     stage_name,
                     int((end - start) * 1000),
                     status,
@@ -100,13 +104,11 @@ class StageMonitor:
     def write(self, path: str) -> int:
         """Write the rows so far as ``path/part-00000.parquet`` and return
         their count. pyarrow writes them from the driver, so a flush
-        needs no Spark job; the file is written under a hidden name and
-        renamed into place, so a reader never sees a partial log."""
+        needs no Spark job; `commit_file` puts it in place whole, so a
+        reader never sees a partial log."""
         os.makedirs(path, exist_ok=True)
         table = pa.Table.from_pylist([dict(zip(MONITOR_SCHEMA.names, r)) for r in self.rows], MONITOR_SCHEMA)
-        tmp = os.path.join(path, ".part-00000.parquet.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(path, "part-00000.parquet"))
+        commit_file(os.path.join(path, "part-00000.parquet"), lambda tmp: pq.write_table(table, tmp))
         return table.num_rows
 
 

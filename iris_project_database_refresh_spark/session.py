@@ -12,11 +12,10 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_session(app_name: str = "iris-spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_session(app_name: str = "iris-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
+    shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -21,7 +21,9 @@ Scale notes
   (The reference hashes the whole pandas frame in memory;
   order-insensitive hashing is the distributed equivalent.)
 * The manifest itself is kilobytes of driver-side JSON — the one piece
-  that *should* be driver-side; building it starts no Spark job.
+  that *should* be driver-side; building it starts no Spark job. Its
+  presence marks a completed cycle, so it is committed whole through
+  `snapshots.commit_file`: a failed write leaves no manifest file.
 """
 
 from __future__ import annotations
@@ -29,10 +31,13 @@ from __future__ import annotations
 import json
 import os
 from datetime import datetime, timezone
+from pathlib import Path
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .snapshots import commit_file
 
 PIPELINE_VERSION = "spark_refresh_v1.0"
 STAGE_VERSION = "3.0"
@@ -133,11 +138,9 @@ def generate_deployment_metadata(
 
 
 def write_deployment_metadata(metadata: dict, out_dir: str) -> str:
-    """Write ``deployment_metadata_<ts>.json`` into ``out_dir``; returns path."""
+    """Commit ``deployment_metadata_<ts>.json`` into ``out_dir``; returns path."""
     os.makedirs(out_dir, exist_ok=True)
     ts = metadata["deployment_info"]["timestamp"]
     path = os.path.join(out_dir, f"deployment_metadata_{ts}.json")
-    with open(path, "w") as f:
-        json.dump(metadata, f, indent=2, sort_keys=True)
-        f.write("\n")
+    commit_file(path, lambda tmp: Path(tmp).write_text(json.dumps(metadata, indent=2, sort_keys=True) + "\n"))
     return path

@@ -16,10 +16,11 @@ the partitions the delta lands in:
   ``PartitionFilters`` prune directories BEFORE any IO (asserted in
   tests) — the mechanism that makes a 100 TB table behave like the
   few-GB slice a query actually touches.
-* `cow_merge` — copy-on-write upsert: join the incoming batch's
-  partition keys against the layout, rewrite ONLY the impacted
-  partition directories (``INSERT OVERWRITE`` on a partition subset via
-  dynamic partition overwrite), leave every other file untouched
+* `cow_merge` — copy-on-write upsert: `functions/distributed.replace_keys`
+  over the slice of the layout in the partitions the batch touches,
+  then rewrite ONLY those partition directories (``INSERT OVERWRITE``
+  on a partition subset via dynamic partition overwrite), leave every
+  other file untouched
   (asserted byte-identical in tests). This is the stage4 master-merge
   re-expressed so refresh cost scales with the delta, not the corpus —
   the same motivation as `dedup_incremental`'s batch-vs-master probe.
@@ -33,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.distributed import replace_keys
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
@@ -68,17 +71,13 @@ def cow_merge(
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         impacted = batch.select(*partition_cols).distinct()
-        existing = spark.read.parquet(path)
-        # carried = rows in impacted partitions, not replaced by the batch
-        carried = existing.join(F.broadcast(impacted), partition_cols, "left_semi").join(
-            batch.select(key_col), [key_col], "left_anti"
-        )
+        current = spark.read.parquet(path).join(F.broadcast(impacted), partition_cols, "left_semi")
         # eager pin: the write targets the same path it reads, so the
         # carried rows must be fully materialized before any file is
         # replaced (also satisfies Spark's read/overwrite cycle check).
         # Cost is proportional to the impacted partitions — i.e. to the
         # delta — which is the whole point of the copy-on-write layout.
-        merged = carried.unionByName(batch).localCheckpoint(eager=True)
+        merged = replace_keys(current, batch, [key_col]).localCheckpoint(eager=True)
         (
             merged.repartition(*[F.col(c) for c in partition_cols])
             .write.partitionBy(*partition_cols)

@@ -1,5 +1,5 @@
 """Snapshot-log table format: versioned manifests + time travel over
-plain parquet.
+plain parquet, and the package's one atomic file commit.
 
 The reference keeps exactly one current state — stage4 overwrites the
 master CSV in place (`catalog search/stage4_update_csv.py`) and keeps
@@ -21,28 +21,73 @@ Layout:
 
     table_dir/
       data/part-<version>-<n>.parquet   -- immutable data files
+      deletes/dv-<version>-<n>.parquet  -- deletion vectors (tombstones)
       _log/v000001.json                 -- one manifest per commit
 
 Manifest: {"version", "committed_at", "operation", "files": [{"path",
-"rows", "partition": {col: value}}], "schema": [...]}. `files` is the
-COMPLETE live set at that version (simple and O(files); the
+"partition": {col: value}}], "delete_vectors": [...], "schema": [...]}.
+`files` is the COMPLETE live set at that version and `delete_vectors`
+every tombstone file that applies to it (simple and O(files); the
 incremental add/remove encoding plus periodic checkpoints is the known
 production refinement — Delta's exact structure).
 
-Commit protocol: manifests are written to a temp name then atomically
-renamed to v{N}; the highest contiguous v{N} wins, so a crashed writer
-leaves no torn state behind (single-writer semantics; multi-writer
-needs a CAS on the log — the documented service-side extension).
+Commit protocol: `commit_file` is the package's one atomic file
+commit. It writes a file under a hidden temporary name in the target's
+directory and renames it into place with one `os.replace`, so a reader
+or a crash sees the old file or the new one, never part of one. The
+manifests here, the refresh's monitor log and deployment manifest
+(`plans/pipeline.py`, `sinks/deployment.py`) and the IVF index's
+manifest (`sinks/vector_index.py`) are all committed through it. A
+manifest is committed as v{N}; the highest v{N} wins, so a crashed
+writer leaves no torn version behind (single-writer semantics;
+multi-writer needs a CAS on the log — the documented service-side
+extension).
+
+Data files are written by `_write_staged` alone: a Spark write into a
+hidden staging directory, whose part files move into place under
+version-stamped names. Every read of a version goes through
+`_read_entries`, which restores partition columns and applies
+deletion vectors.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from functools import reduce
+from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+# A row's (data file name, row position), named apart from any table
+# column: a table may have its own `file_name` (the master catalog's key).
+PROVENANCE = ["__file", "__row"]
+TOMBSTONE_SCHEMA = "file_name string, row_index bigint"
+
+
+def commit_file(path: str, write) -> None:
+    """Replace ``path`` atomically with the file that ``write(tmp)``
+    writes at ``tmp``.
+
+    ``tmp`` is a hidden name (leading ``.``) in the same directory, so
+    neither a Spark read of the directory nor a glob of the visible
+    names sees it, and one ``os.replace`` moves it onto ``path``. If
+    ``write`` raises, the temporary is removed and ``path`` keeps its
+    previous content (or stays absent).
+    """
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):  # only when write or replace failed
+            os.remove(tmp)
 
 
 def _log_dir(table_dir: str) -> str:
@@ -51,6 +96,10 @@ def _log_dir(table_dir: str) -> str:
 
 def _data_dir(table_dir: str) -> str:
     return os.path.join(table_dir, "data")
+
+
+def _dv_dir(table_dir: str) -> str:
+    return os.path.join(table_dir, "deletes")
 
 
 def _versions(table_dir: str) -> list[int]:
@@ -69,46 +118,105 @@ def _read_manifest(table_dir: str, version: int) -> dict:
         return json.load(f)
 
 
-def _write_files(df: DataFrame, table_dir: str, version: int, partition_col: str | None):
-    """Write immutable data files for this commit; one file per
-    partition value when partitioned (no small-file explosion),
-    else one file per task. Returns file entries with row counts."""
-    staging = os.path.join(_data_dir(table_dir), f".staging-{uuid.uuid4().hex}")
-    if partition_col:
-        df.repartition(partition_col).write.partitionBy(partition_col).parquet(staging)
-    else:
-        df.write.parquet(staging)
-    entries = []
-    n = 0
-    for root, _dirs, names in os.walk(staging):
-        for name in sorted(names):
-            if not name.endswith(".parquet"):
-                continue
+def _commit(
+    table_dir: str, version: int, operation: str, schema: dict, files: list[dict], delete_vectors: list[str]
+) -> int:
+    """Commit manifest v{version} through `commit_file`; returns the version."""
+    manifest = {
+        "version": version,
+        "committed_at": int(time.time() * 1000),
+        "operation": operation,
+        "schema": schema,
+        "files": files,
+        "delete_vectors": delete_vectors,
+    }
+    path = os.path.join(_log_dir(table_dir), f"v{version:06d}.json")
+    commit_file(path, lambda tmp: Path(tmp).write_text(json.dumps(manifest, indent=1, sort_keys=True)))
+    return version
+
+
+def _write_staged(writer: DataFrameWriter, dest: str, prefix: str) -> list[dict]:
+    """Spark-write through ``writer`` into a hidden staging directory
+    under ``dest`` and move each part file into ``dest`` as
+    ``<prefix>-<n>.parquet``. Returns one file entry per file: its
+    ``path`` and the ``partition`` values of its hive directories. The
+    staging directory is removed whether or not the write succeeds."""
+    staging = os.path.join(dest, f".staging-{uuid.uuid4().hex}")
+    entries: list[dict] = []
+    try:
+        writer.parquet(staging)
+        for root, dirs, names in os.walk(staging):
+            dirs.sort()
             rel = os.path.relpath(root, staging)
-            part = {}
-            if rel != ".":
-                for seg in rel.split(os.sep):
-                    k, _, v = seg.partition("=")
-                    part[k] = v
-            final = f"part-{version:06d}-{n:05d}.parquet"
-            os.replace(os.path.join(root, name), os.path.join(_data_dir(table_dir), final))
-            entries.append({"path": final, "partition": part})
-            n += 1
-    # clean the staging skeleton
-    for root, dirs, names in os.walk(staging, topdown=False):
-        for name in names:
-            os.unlink(os.path.join(root, name))
-        for d in dirs:
-            os.rmdir(os.path.join(root, d))
-    os.rmdir(staging)
+            part = {} if rel == "." else {k: v for k, _, v in (s.partition("=") for s in rel.split(os.sep))}
+            for name in sorted(n for n in names if n.endswith(".parquet")):
+                final = f"{prefix}-{len(entries):05d}.parquet"
+                os.replace(os.path.join(root, name), os.path.join(dest, final))
+                entries.append({"path": final, "partition": part})
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return entries
 
 
-def _commit(table_dir: str, manifest: dict, version: int) -> None:
-    tmp = os.path.join(_log_dir(table_dir), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(_log_dir(table_dir), f"v{version:06d}.json"))
+def _write_files(df: DataFrame, table_dir: str, version: int, partition_col: str | None) -> list[dict]:
+    """Write immutable data files for this commit; one file per
+    partition value when partitioned (no small-file explosion),
+    else one file per task."""
+    writer = df.repartition(partition_col).write.partitionBy(partition_col) if partition_col else df.write
+    return _write_staged(writer, _data_dir(table_dir), f"part-{version:06d}")
+
+
+def _tombstones(spark: SparkSession, table_dir: str, names) -> DataFrame:
+    """The row positions the deletion-vector files ``names`` tombstone."""
+    paths = [os.path.join(_dv_dir(table_dir), n) for n in sorted(names)]
+    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(*paths).toDF(*PROVENANCE)
+
+
+def _read_entries(
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schema_json: dict,
+    deletes=(),
+    *,
+    provenance: bool = False,
+) -> DataFrame:
+    """The rows of the manifest file entries ``entries``, in the
+    committed schema, minus the rows that the deletion-vector files
+    ``deletes`` tombstone.
+
+    The files of one partition are one multi-path read. Their partition
+    values (strings in the manifest) are attached cast to the committed
+    types, so a predicate on a partition column compares typed values.
+    With ``provenance`` each row leads with `PROVENANCE`, its data file
+    and row position. Only the tombstone join and the callers that need
+    it select that metadata: once selected, Spark keeps it in the file
+    scan even after it is dropped.
+    """
+    schema = StructType.fromJson(schema_json)
+    if not entries:
+        prov = [StructField("__file", StringType()), StructField("__row", LongType())] if provenance else []
+        return spark.createDataFrame([], StructType(prov + schema.fields))
+    types = {f.name: f.dataType for f in schema.fields}
+    part_cols = sorted({k for e in entries for k in e["partition"]})
+    by_part: dict[tuple, list[str]] = {}
+    for e in entries:
+        key = tuple(e["partition"].get(c) for c in part_cols)
+        by_part.setdefault(key, []).append(os.path.join(_data_dir(table_dir), e["path"]))
+    tracked = provenance or bool(deletes)
+    cols = (PROVENANCE if tracked else []) + schema.fieldNames()
+    groups = []
+    for key, paths in sorted(by_part.items()):
+        g = spark.read.parquet(*paths)
+        if tracked:
+            g = g.select(F.col("_metadata.file_name").alias("__file"), F.col("_metadata.row_index").alias("__row"), "*")
+        for c, val in zip(part_cols, key):
+            g = g.withColumn(c, F.lit(val).cast(types[c]))
+        groups.append(g.select(*cols))
+    out = reduce(DataFrame.unionByName, groups)
+    if deletes:
+        out = out.join(_tombstones(spark, table_dir, deletes), PROVENANCE, "left_anti")
+    return out if provenance else out.drop(*PROVENANCE)
 
 
 def snapshot_write(
@@ -125,6 +233,7 @@ def snapshot_write(
     adds this batch's files; mode='overwrite_partitions' (requires
     partition_col) carries forward only files whose partition value is
     NOT present in the batch — the COW merge, files untouched on disk.
+    Either way the previous version's deletion vectors stay in force.
 
     `operation` overrides the manifest's recorded operation string
     (default: the mode) — callers that need commit metadata (e.g. the
@@ -132,34 +241,29 @@ def snapshot_write(
     it here so it lands inside the ONE atomic temp-then-rename commit,
     never as an after-the-fact manifest rewrite.
     """
+    if mode not in ("append", "overwrite_partitions"):
+        raise ValueError(f"unknown mode {mode!r}")
+    if mode == "overwrite_partitions" and not partition_col:
+        raise ValueError("overwrite_partitions requires partition_col")
     os.makedirs(_log_dir(table_dir), exist_ok=True)
     os.makedirs(_data_dir(table_dir), exist_ok=True)
     vs = _versions(table_dir)
     version = (vs[-1] + 1) if vs else 1
-    prev_files = _read_manifest(table_dir, vs[-1])["files"] if vs else []
+    prev = _read_manifest(table_dir, vs[-1]) if vs else {"files": []}
 
     new_entries = _write_files(df, table_dir, version, partition_col)
-    if mode == "append":
-        carried = prev_files
-    elif mode == "overwrite_partitions":
-        if not partition_col:
-            raise ValueError("overwrite_partitions requires partition_col")
+    carried = prev["files"]
+    if mode == "overwrite_partitions":
         touched = {e["partition"].get(partition_col) for e in new_entries}
-        carried = [
-            e for e in prev_files if e["partition"].get(partition_col) not in touched
-        ]
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-
-    manifest = {
-        "version": version,
-        "committed_at": int(time.time() * 1000),
-        "operation": operation if operation is not None else mode,
-        "schema": df.schema.jsonValue(),
-        "files": carried + new_entries,
-    }
-    _commit(table_dir, manifest, version)
-    return version
+        carried = [e for e in carried if e["partition"].get(partition_col) not in touched]
+    return _commit(
+        table_dir,
+        version,
+        operation if operation is not None else mode,
+        df.schema.jsonValue(),
+        carried + new_entries,
+        prev.get("delete_vectors", []),
+    )
 
 
 def snapshot_read(
@@ -167,9 +271,8 @@ def snapshot_read(
 ) -> DataFrame:
     """Read the table as of `version` (default: latest). Partition
     values come back as columns, reconstructed from manifest metadata —
-    no directory listing, no partition discovery job."""
-    from pyspark.sql import functions as F
-
+    no directory listing, no partition discovery job. An empty version
+    reads as an empty frame with the committed schema."""
     vs = _versions(table_dir)
     if not vs:
         raise FileNotFoundError(f"no snapshots at {table_dir}")
@@ -177,54 +280,7 @@ def snapshot_read(
     if v not in vs:
         raise FileNotFoundError(f"version {v} not in log (have {vs})")
     m = _read_manifest(table_dir, v)
-    if not m["files"]:
-        # empty version (append of an empty batch, or every partition
-        # overwritten away): still readable, with the committed schema
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(m["schema"]))
-    part_cols = sorted({k for e in m["files"] for k in e["partition"]})
-    dfs = []
-    # group files by partition tuple so each group is ONE multi-path read
-    by_part: dict[tuple, list[str]] = {}
-    for e in m["files"]:
-        key = tuple(e["partition"].get(c) for c in part_cols)
-        by_part.setdefault(key, []).append(
-            os.path.join(_data_dir(table_dir), e["path"])
-        )
-    dvs = m.get("delete_vectors", [])
-    for key, paths in sorted(by_part.items()):
-        part = spark.read.parquet(*paths)
-        if dvs:  # carry row provenance for the MOR anti-join below
-            part = part.select(
-                F.col("_metadata.file_name").alias("__file"),
-                F.col("_metadata.row_index").alias("__row"),
-                "*",
-            )
-        for c, val in zip(part_cols, key):
-            part = part.withColumn(c, F.lit(val))
-        dfs.append(part)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    if dvs:
-        tombstones = spark.read.parquet(
-            *[os.path.join(_dv_dir(table_dir), name) for name in dvs]
-        ).selectExpr("file_name as __file", "row_index as __row")
-        out = out.join(tombstones, ["__file", "__row"], "left_anti").drop("__file", "__row")
-    # restore the committed schema: column order AND partition-column
-    # types (partition values travel as strings in the manifest)
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(m["schema"])
-    return out.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in part_cols
-            else F.col(f.name)
-            for f in schema.fields
-        ]
-    )
+    return _read_entries(spark, table_dir, m["files"], m["schema"], m.get("delete_vectors", []))
 
 
 def snapshot_history(table_dir: str) -> list[dict]:
@@ -251,68 +307,20 @@ def snapshot_history(table_dir: str) -> list[dict]:
 # back into clean files (the maintenance job table formats schedule).
 
 
-def _dv_dir(table_dir: str) -> str:
-    return os.path.join(table_dir, "deletes")
-
-
 def snapshot_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
     """Commit a position-delete of every current row matching
-    `predicate`. No data file is touched; returns the new version."""
-    from pyspark.sql import functions as F
-
+    `predicate`, which may name partition columns too. No data file is
+    touched; returns the new version."""
     vs = _versions(table_dir)
     if not vs:
         raise FileNotFoundError(f"no snapshots at {table_dir}")
     cur = _read_manifest(table_dir, vs[-1])
     version = vs[-1] + 1
-    # Partitioned writes strip the partition column from the data files
-    # (it lives only in manifest metadata) — re-attach it per file group
-    # (as snapshot_read does, with the committed type restored) so a
-    # DELETE predicate may reference partition columns too.
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(cur["schema"])
-    part_cols = sorted({k for e in cur["files"] for k in e["partition"]})
-    part_types = {f.name: f.dataType for f in schema.fields if f.name in part_cols}
-    by_part: dict[tuple, list[str]] = {}
-    for e in cur["files"]:
-        key = tuple(e["partition"].get(c) for c in part_cols)
-        by_part.setdefault(key, []).append(os.path.join(_data_dir(table_dir), e["path"]))
-    groups = []
-    for key, paths in sorted(by_part.items()):
-        g = spark.read.parquet(*paths).select(
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.row_index").alias("row_index"),
-            "*",
-        )
-        for c, val in zip(part_cols, key):
-            g = g.withColumn(c, F.lit(val).cast(part_types.get(c, "string")))
-        groups.append(g)
-    scan = groups[0]
-    for g in groups[1:]:
-        scan = scan.unionByName(g)
-    hits = scan.where(predicate).select("file_name", "row_index")
-    staging = os.path.join(_dv_dir(table_dir), f".staging-{uuid.uuid4().hex}")
-    hits.coalesce(1).write.parquet(staging)
-    os.makedirs(_dv_dir(table_dir), exist_ok=True)
-    dv_name = None
-    for name in sorted(os.listdir(staging)):
-        if name.endswith(".parquet"):
-            dv_name = f"dv-{version:06d}.parquet"
-            os.replace(os.path.join(staging, name), os.path.join(_dv_dir(table_dir), dv_name))
-    for name in os.listdir(staging):
-        os.unlink(os.path.join(staging, name))
-    os.rmdir(staging)
-    manifest = {
-        "version": version,
-        "committed_at": int(time.time() * 1000),
-        "operation": "delete",
-        "schema": cur["schema"],
-        "files": cur["files"],
-        "delete_vectors": cur.get("delete_vectors", []) + ([dv_name] if dv_name else []),
-    }
-    _commit(table_dir, manifest, version)
-    return version
+    dvs = cur.get("delete_vectors", [])
+    live = _read_entries(spark, table_dir, cur["files"], cur["schema"], dvs, provenance=True)
+    hits = live.where(predicate).selectExpr("__file AS file_name", "__row AS row_index")
+    added = _write_staged(hits.coalesce(1).write, _dv_dir(table_dir), f"dv-{version:06d}")
+    return _commit(table_dir, version, "delete", cur["schema"], cur["files"], dvs + [e["path"] for e in added])
 
 
 def snapshot_compact(spark: SparkSession, table_dir: str, *, partition_col: str | None = None) -> int:
@@ -323,18 +331,8 @@ def snapshot_compact(spark: SparkSession, table_dir: str, *, partition_col: str 
     vs = _versions(table_dir)
     cur = _read_manifest(table_dir, vs[-1])
     version = vs[-1] + 1
-    df = snapshot_read(spark, table_dir)
-    entries = _write_files(df, table_dir, version, partition_col)
-    manifest = {
-        "version": version,
-        "committed_at": int(time.time() * 1000),
-        "operation": "compact",
-        "schema": cur["schema"],
-        "files": entries,
-        "delete_vectors": [],
-    }
-    _commit(table_dir, manifest, version)
-    return version
+    entries = _write_files(snapshot_read(spark, table_dir), table_dir, version, partition_col)
+    return _commit(table_dir, version, "compact", cur["schema"], entries, [])
 
 
 def snapshot_expire(table_dir: str, *, keep_last: int) -> dict:
@@ -387,59 +385,12 @@ def snapshot_expire(table_dir: str, *, keep_last: int) -> dict:
 # read(v1) EXCEPT read(v0) both directions is asserted in tests.
 
 
-def _read_entries(
-    spark: SparkSession, table_dir: str, entries: list[dict], schema_json: dict
-):
-    """Read a manifest file-entry list with partition columns restored
-    and (file, row) provenance attached — the snapshot_read grouping,
-    factored for the CDF reader."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(schema_json)
-    if not entries:
-        base = spark.createDataFrame([], schema)
-        return base.selectExpr(
-            "cast(null as string) as __file", "cast(null as bigint) as __row", "*"
-        ).limit(0)
-    part_cols = sorted({k for e in entries for k in e["partition"]})
-    by_part: dict[tuple, list[str]] = {}
-    for e in entries:
-        key = tuple(e["partition"].get(c) for c in part_cols)
-        by_part.setdefault(key, []).append(os.path.join(_data_dir(table_dir), e["path"]))
-    dfs = []
-    for key, paths in sorted(by_part.items()):
-        part = spark.read.parquet(*paths).select(
-            F.col("_metadata.file_name").alias("__file"),
-            F.col("_metadata.row_index").alias("__row"),
-            "*",
-        )
-        for c, val in zip(part_cols, key):
-            part = part.withColumn(c, F.lit(val))
-        dfs.append(part)
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out.select(
-        "__file",
-        "__row",
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in part_cols
-            else F.col(f.name)
-            for f in schema.fields
-        ],
-    )
-
-
 def snapshot_changes(
     spark: SparkSession, table_dir: str, v0: int, v1: int
 ) -> DataFrame:
     """Rows that changed between versions, with a `_change_type` column
     ('insert' | 'delete'). v0 < v1 required; cost scales with changed
     files and tombstones only."""
-    from pyspark.sql import functions as F
-
     vs = _versions(table_dir)
     if v0 not in vs or v1 not in vs or not v0 < v1:
         raise ValueError(f"need v0 < v1 from the log (have {vs})")
@@ -450,31 +401,14 @@ def snapshot_changes(
     removed = [e for e in m0["files"] if e["path"] not in paths1]
     dv0, dv1 = set(m0.get("delete_vectors", [])), set(m1.get("delete_vectors", []))
 
-    def tombstones(names: set) -> DataFrame | None:
-        if not names:
-            return None
-        return spark.read.parquet(
-            *[os.path.join(_dv_dir(table_dir), n) for n in sorted(names)]
-        ).selectExpr("file_name as __file", "row_index as __row")
-
-    inserts = _read_entries(spark, table_dir, added, m1["schema"])
-    t1 = tombstones(dv1)
-    if t1 is not None:
-        inserts = inserts.join(t1, ["__file", "__row"], "left_anti")
-    deletes = _read_entries(spark, table_dir, removed, m0["schema"])
-    t0 = tombstones(dv0)
-    if t0 is not None:
-        deletes = deletes.join(t0, ["__file", "__row"], "left_anti")
+    inserts = _read_entries(spark, table_dir, added, m1["schema"], dv1)
+    deletes = _read_entries(spark, table_dir, removed, m0["schema"], dv0)
     carried = [e for e in m0["files"] if e["path"] in paths1]
-    new_dv = tombstones(dv1 - dv0)
-    if new_dv is not None and carried:
-        tomb_rows = _read_entries(spark, table_dir, carried, m0["schema"]).join(
-            new_dv, ["__file", "__row"], "left_semi"
+    if dv1 - dv0 and carried:
+        tombstoned = _read_entries(spark, table_dir, carried, m0["schema"], provenance=True).join(
+            _tombstones(spark, table_dir, dv1 - dv0), PROVENANCE, "left_semi"
         )
-        deletes = deletes.unionByName(tomb_rows)
-    return (
-        inserts.drop("__file", "__row").withColumn("_change_type", F.lit("insert"))
-        .unionByName(
-            deletes.drop("__file", "__row").withColumn("_change_type", F.lit("delete"))
-        )
+        deletes = deletes.unionByName(tombstoned.drop(*PROVENANCE))
+    return inserts.withColumn("_change_type", F.lit("insert")).unionByName(
+        deletes.withColumn("_change_type", F.lit("delete"))
     )

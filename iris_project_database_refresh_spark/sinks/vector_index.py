@@ -15,7 +15,10 @@ Build: one narrow pass scores every vector against the codebook (one
 broadcast row holding all centroids) and keeps the argmax cell, ties to
 the lower cell, as `knn_ivf` does. The manifest's per-cell counts are
 observed on the write of `cells/`, not recomputed; every build writes a
-fresh `build_id`.
+fresh `build_id`. The manifest is committed last and whole through
+`snapshots.commit_file`, so a search reads the previous manifest or the
+new one, never part of one, and a build that fails before its commit
+leaves the previous manifest byte-identical.
 
 Handle: `IvfIndex.open(index_dir)` returns the open handle of the
 directory's current index version. It is opened once and kept per
@@ -72,6 +75,7 @@ import os
 import threading
 import uuid
 from decimal import ROUND_HALF_UP, Decimal
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -79,6 +83,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..operators.advanced import CENTROID_BASE, IVF_K, IVF_QUERIES, NCELLS, NPROBE, _as_double, _dot_sql
 from ..sources.tables import load_table
+from .snapshots import commit_file
 
 CODEBOOK_SCHEMA = "cell bigint, cv array<double>"
 CELLS_SCHEMA = "vec_id bigint, v array<double>, cell bigint"
@@ -172,8 +177,10 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> dict:
     )
     counts = {c: n for c, n in obs.get.items() if n}
     manifest = {"build_id": uuid.uuid4().hex, "ncells": NCELLS, "nprobe": NPROBE, "cell_rows": counts}
-    with open(os.path.join(index_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
+    commit_file(
+        os.path.join(index_dir, "manifest.json"),
+        lambda tmp: Path(tmp).write_text(json.dumps(manifest, indent=1, sort_keys=True)),
+    )
     return manifest
 
 

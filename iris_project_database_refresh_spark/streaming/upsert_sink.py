@@ -4,11 +4,12 @@ The reference uploads refresh batches with a staging-table upsert
 (`semantic search/stage_06_database_upload.py:161`); the streaming
 analogue applies the same key-replacement semantics to each micro-batch.
 `foreachBatch` hands us each micro-batch as a normal DataFrame, so the
-merge is the identical anti-join ∪ batch algebra used by
-`operators/catalog.refresh_upsert`.
+merge is `functions/distributed.replace_keys`, the anti-join ∪ batch
+that `operators/catalog.refresh_upsert` also uses.
 
-The demo target is a parquet directory (read → anti-join → union →
-overwrite). Parquet can't delete in place, so the table is rewritten —
+The demo target is a parquet directory (read → `replace_keys` →
+staging copy → overwrite). The staging copy is the one full copy of
+the merged table while the final overwrite replaces the target. Parquet can't delete in place, so the table is rewritten —
 fine for a demo/test; a production deployment points the same merge at
 a format with ACID row-level ops (Delta/Iceberg/JDBC via
 sinks/jdbc.JdbcUpsertSink) and the foreachBatch body shrinks to a
@@ -20,6 +21,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.distributed import replace_keys
 
 
 class ParquetUpsertTable:
@@ -39,12 +42,7 @@ class ParquetUpsertTable:
     def merge(self, batch: DataFrame) -> None:
         if batch.isEmpty():
             return
-        if self.exists():
-            current = self.read()
-            keys = batch.select(self.key).distinct()
-            merged = current.join(keys, self.key, "left_anti").unionByName(batch)
-        else:
-            merged = batch
+        merged = replace_keys(self.read(), batch, [self.key]) if self.exists() else batch
         # stage the rewrite next to the table, then swap — the parquet
         # analogue of the reference's staging-table commit
         staging = self.path + "__staging"

@@ -240,10 +240,12 @@ def test_band_sweep_rejects_a_document_without_shingles(spark, tmp_path):
     from iris_project_database_refresh_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_CORRECT, "documents").orderBy("doc_id").limit(20)
-    bad = docs.limit(1).withColumn("doc_id", F.lit(4242).cast(docs.schema["doc_id"].dataType))
+    # 4243 is a multiple of neither 5 nor 7, so the planted corpus holds no
+    # copy of it: it is the one document without shingles
+    bad = docs.limit(1).withColumn("doc_id", F.lit(4243).cast(docs.schema["doc_id"].dataType))
     bad = bad.withColumn("text", F.lit(None).cast("string"))
     docs.unionByName(bad).write.parquet(str(tmp_path / "documents.parquet"))
-    with pytest.raises(Exception, match="document 4242 has no shingles"):
+    with pytest.raises(Exception, match="document 4243 has no shingles"):
         dedup.dedup_band_sweep(spark, str(tmp_path)).collect()
 
 

@@ -10,7 +10,12 @@ import pytest
 
 from iris_project_database_refresh_spark.operators import catalog, chunking, embeddings
 from iris_project_database_refresh_spark.plans.pipeline import MONITOR_SCHEMA, StageMonitor, run_refresh
-from iris_project_database_refresh_spark.sinks.deployment import dataframe_content_hash
+from iris_project_database_refresh_spark.sinks.deployment import (
+    ExportedFile,
+    dataframe_content_hash,
+    generate_deployment_metadata,
+    write_deployment_metadata,
+)
 from iris_project_database_refresh_spark.sources.formats import (
     read_csv,
     read_jsonl,
@@ -187,6 +192,40 @@ def test_failed_stage_leaves_one_readable_monitor_file(spark, tmp_path, monkeypa
     assert rows["catalog_merge"].status == "Failure"
     assert "merge exploded" in rows["catalog_merge"].decision_details
     assert all(r.status == "Success" for name, r in rows.items() if name != "catalog_merge")
+
+
+def test_failed_monitor_write_keeps_previous_log(tmp_path, monkeypatch):
+    """A monitor-log write that fails part way leaves the previous log
+    byte-identical and no temporary file beside it."""
+    out = str(tmp_path / "monitor_logs")
+    mon = StageMonitor()
+    mon.run("delta_detection", lambda: None)
+    mon.write(out)
+    before = open(out + "/part-00000.parquet", "rb").read()
+
+    def torn(_table, where, **_kwargs):
+        with open(where, "wb") as f:
+            f.write(before[:10])
+        raise OSError("disk full")
+
+    mon.run("section_processing", lambda: None)
+    monkeypatch.setattr(pq, "write_table", torn)
+    with pytest.raises(OSError, match="disk full"):
+        mon.write(out)
+    assert os.listdir(out) == ["part-00000.parquet"]
+    assert open(out + "/part-00000.parquet", "rb").read() == before
+
+
+def test_failed_manifest_write_leaves_no_manifest(tmp_path):
+    """The deployment manifest's presence marks a completed cycle, so a
+    manifest write that fails leaves no manifest file at all."""
+    out = str(tmp_path / "refresh")
+    empty = ExportedFile("master", ["id"], 0, "0000000000000000-0")
+    meta = generate_deployment_metadata(empty, empty._replace(name="chunks"), sources_included=["a"])
+    meta["file_info"]["stage_outputs"] = {"master": object()}  # not JSON-serializable
+    with pytest.raises(TypeError):
+        write_deployment_metadata(meta, out)
+    assert os.listdir(out) == []
 
 
 def test_refresh_of_empty_corpus(spark, tmp_path):

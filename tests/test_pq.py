@@ -108,6 +108,21 @@ def test_persisted_ivf_index_serves_identically(spark, tmp_path, monkeypatch):
     assert m and "cell" in m.group(1), f"cells scan not partition-pruned: {plan[:400]}"
 
 
+def test_failed_manifest_commit_keeps_previous_manifest(spark, tmp_path, monkeypatch):
+    """A rebuild whose manifest write fails leaves `manifest.json`
+    byte-identical to the previous build's and no temporary beside it."""
+    from iris_project_database_refresh_spark.sinks import vector_index
+
+    d = str(tmp_path / "ivf")
+    vector_index.build_ivf_index(spark, SF_CORRECT, d)
+    before = open(os.path.join(d, "manifest.json"), "rb").read()
+    monkeypatch.setattr(vector_index, "NPROBE", object())  # not JSON-serializable
+    with pytest.raises(TypeError):
+        vector_index.build_ivf_index(spark, SF_CORRECT, d)
+    assert open(os.path.join(d, "manifest.json"), "rb").read() == before
+    assert sorted(os.listdir(d)) == ["cells", "codebook", "manifest.json"]
+
+
 @pytest.fixture(scope="module")
 def ivf_index(spark, tmp_path_factory):
     from iris_project_database_refresh_spark.sinks.vector_index import build_ivf_index

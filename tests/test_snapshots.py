@@ -242,3 +242,48 @@ def test_snapshot_changes_equals_time_travel_diff(spark, tmp_path):
         assert ins - dels == want_ins, (a, b)
         assert dels - ins == want_del, (a, b)
     assert snapshot_changes(spark, d, v2, v3).where("_change_type = 'delete'").count() == 1
+
+
+def test_delete_on_table_with_provenance_named_columns(spark, tmp_path):
+    """A table may have its own `file_name` and `row_index` columns (the
+    master catalog's key is `file_name`): a delete predicate on them
+    tombstones exactly the matching rows."""
+    from iris_project_database_refresh_spark.sinks.snapshots import snapshot_delete
+
+    d = str(tmp_path / "catalog_tbl")
+    rows = [(i, f"doc_{i}.pdf", i % 4, i * 10) for i in range(8)]
+    snapshot_write(spark.createDataFrame(rows, "id long, file_name string, row_index long, v long"), d)
+    v2 = snapshot_delete(spark, d, "file_name = 'doc_3.pdf' OR row_index = 0")
+    got = _rows(snapshot_read(spark, d, version=v2))
+    assert got == [r for r in rows if r[1] != "doc_3.pdf" and r[2] != 0]
+
+
+def test_append_after_delete_keeps_rows_deleted(spark, table):
+    """Deletion vectors stay in force across later commits: an append
+    after a delete does not bring the deleted rows back, and the change
+    feed of the append holds only the appended rows."""
+    from iris_project_database_refresh_spark.sinks.snapshots import snapshot_changes, snapshot_delete
+
+    d, *_ = table
+    v4 = snapshot_delete(spark, d, "v >= 50")
+    after_delete = _rows(snapshot_read(spark, d, version=v4))
+    extra = spark.createDataFrame([(300, "d2", 7)], "id long, day string, v long")
+    v5 = snapshot_write(extra, d, mode="append", partition_col="day")
+    assert _rows(snapshot_read(spark, d, version=v5)) == sorted(after_delete + [(300, "d2", 7)])
+    changes = snapshot_changes(spark, d, v4, v5).collect()
+    assert [tuple(r) for r in changes] == [(300, "d2", 7, "insert")]
+
+
+def test_failed_manifest_commit_keeps_previous_version(spark, table):
+    """A manifest write that fails leaves the previous version current,
+    readable as before, and no temporary file in the log."""
+    d, (v1, v2, v3), *_ = table
+    before = _rows(snapshot_read(spark, d))
+    log = os.path.join(d, "_log")
+    log_files = sorted(os.listdir(log))
+    batch = spark.createDataFrame([(400, "d0", 1)], "id long, day string, v long")
+    with pytest.raises(TypeError):
+        snapshot_write(batch, d, partition_col="day", operation=object())  # not JSON-serializable
+    assert sorted(os.listdir(log)) == log_files
+    assert [h["version"] for h in snapshot_history(d)] == [v1, v2, v3]
+    assert _rows(snapshot_read(spark, d)) == before
