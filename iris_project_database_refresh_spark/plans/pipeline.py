@@ -108,7 +108,7 @@ class StageMonitor:
         reader never sees a partial log."""
         os.makedirs(path, exist_ok=True)
         table = pa.Table.from_pylist([dict(zip(MONITOR_SCHEMA.names, r)) for r in self.rows], MONITOR_SCHEMA)
-        commit_file(os.path.join(path, "part-00000.parquet"), lambda tmp: pq.write_table(table, tmp))
+        commit_file(os.path.join(path, "part-00000.parquet"), lambda tmp: pq.write_table(table, tmp, compression="zstd"))
         return table.num_rows
 
 

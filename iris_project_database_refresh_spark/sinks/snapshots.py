@@ -59,6 +59,7 @@ import time
 import uuid
 from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
@@ -135,6 +136,17 @@ def _commit(
     return version
 
 
+def _partition_values(rel: str) -> dict:
+    """The partition values of a part file's hive directories, ``rel``
+    being their path (``.`` for none). Spark percent-escapes each value
+    (``%`` itself included, so `unquote` is exact) and writes a NULL as
+    ``__HIVE_DEFAULT_PARTITION__``, which maps to None."""
+    if rel == ".":
+        return {}
+    dirs = (s.partition("=") for s in rel.split(os.sep))
+    return {k: None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v) for k, _, v in dirs}
+
+
 def _write_staged(writer: DataFrameWriter, dest: str, prefix: str) -> list[dict]:
     """Spark-write through ``writer`` into a hidden staging directory
     under ``dest`` and move each part file into ``dest`` as
@@ -147,8 +159,7 @@ def _write_staged(writer: DataFrameWriter, dest: str, prefix: str) -> list[dict]
         writer.parquet(staging)
         for root, dirs, names in os.walk(staging):
             dirs.sort()
-            rel = os.path.relpath(root, staging)
-            part = {} if rel == "." else {k: v for k, _, v in (s.partition("=") for s in rel.split(os.sep))}
+            part = _partition_values(os.path.relpath(root, staging))
             for name in sorted(n for n in names if n.endswith(".parquet")):
                 final = f"{prefix}-{len(entries):05d}.parquet"
                 os.replace(os.path.join(root, name), os.path.join(dest, final))
@@ -185,9 +196,11 @@ def _read_entries(
     committed schema, minus the rows that the deletion-vector files
     ``deletes`` tombstone.
 
-    The files of one partition are one multi-path read. Their partition
-    values (strings in the manifest) are attached cast to the committed
-    types, so a predicate on a partition column compares typed values.
+    The files of one partition are one multi-path read in the committed
+    schema minus the partition columns (the files do not hold them), so
+    no read runs a schema-inference job. Their partition values (strings
+    or None in the manifest) are attached cast to the committed types,
+    so a predicate on a partition column compares typed values.
     With ``provenance`` each row leads with `PROVENANCE`, its data file
     and row position. Only the tombstone join and the callers that need
     it select that metadata: once selected, Spark keeps it in the file
@@ -203,11 +216,12 @@ def _read_entries(
     for e in entries:
         key = tuple(e["partition"].get(c) for c in part_cols)
         by_part.setdefault(key, []).append(os.path.join(_data_dir(table_dir), e["path"]))
+    file_schema = StructType([f for f in schema.fields if f.name not in part_cols])
     tracked = provenance or bool(deletes)
     cols = (PROVENANCE if tracked else []) + schema.fieldNames()
     groups = []
-    for key, paths in sorted(by_part.items()):
-        g = spark.read.parquet(*paths)
+    for key, paths in sorted(by_part.items(), key=lambda kv: [(v is None, v or "") for v in kv[0]]):
+        g = spark.read.schema(file_schema).parquet(*paths)
         if tracked:
             g = g.select(F.col("_metadata.file_name").alias("__file"), F.col("_metadata.row_index").alias("__row"), "*")
         for c, val in zip(part_cols, key):

@@ -9,7 +9,9 @@ that `operators/catalog.refresh_upsert` also uses.
 
 The demo target is a parquet directory (read → `replace_keys` →
 staging copy → overwrite). The staging copy is the one full copy of
-the merged table while the final overwrite replaces the target. Parquet can't delete in place, so the table is rewritten —
+the merged table while the final overwrite replaces the target, so it
+is removed once that overwrite succeeds and kept if it fails. Parquet
+can't delete in place, so the table is rewritten —
 fine for a demo/test; a production deployment points the same merge at
 a format with ACID row-level ops (Delta/Iceberg/JDBC via
 sinks/jdbc.JdbcUpsertSink) and the foreachBatch body shrinks to a
@@ -19,6 +21,7 @@ MERGE INTO.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,6 +52,9 @@ class ParquetUpsertTable:
         merged.write.mode("overwrite").parquet(staging)
         final = self.spark.read.parquet(staging)
         final.write.mode("overwrite").parquet(self.path)
+        # only now is the table itself whole again; if the overwrite
+        # raised, the staging copy stays as the one full copy
+        shutil.rmtree(staging)
 
 
 def start_streaming_upsert(

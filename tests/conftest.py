@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib.util
 import math
 import os
 from contextlib import contextmanager
@@ -11,6 +12,12 @@ from iris_project_database_refresh_spark.session import get_session
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = os.environ.get("IRIS_SPARK_TEST_SF_DIR", "/root/testdata/sf0.01")
+
+_spec = importlib.util.spec_from_file_location(
+    "output_bytes", os.path.join(os.path.dirname(__file__), "..", "scripts", "output_bytes.py")
+)
+output_bytes = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(output_bytes)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()

@@ -24,7 +24,7 @@ from iris_project_database_refresh_spark.sources.formats import (
 )
 from iris_project_database_refresh_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT, job_group
+from .conftest import SF_CORRECT, job_group, output_bytes
 
 
 STAGES = {
@@ -99,6 +99,30 @@ def test_refresh_outputs_match_registry(spark, refreshed, output, registry_fn):
     out, _ = refreshed
     written = spark.read.parquet(f"{out}/{output}")
     assert dataframe_content_hash(written) == dataframe_content_hash(registry_fn(spark, SF_CORRECT))
+
+
+def test_refresh_outputs_are_zstd(refreshed):
+    """Every column chunk of every parquet file a refresh writes, the
+    monitor log's included, is zstd-compressed."""
+    out, counts = refreshed
+    columns = output_bytes.output_bytes(out)["columns"]
+    assert {top for top, _ in columns} == set(counts)
+    assert set().union(*(c["codecs"] for c in columns.values())) == {"ZSTD"}
+
+
+def test_output_bytes_script_totals_the_files(refreshed, capsys):
+    """scripts/output_bytes.py accounts for every byte of a refresh output."""
+    out, counts = refreshed
+    got = output_bytes.output_bytes(out)
+    sizes = [os.path.getsize(os.path.join(d, n)) for d, _, names in os.walk(out) for n in names]
+    assert got["total"] == sum(sizes)
+    assert set(counts) <= set(got["outputs"])
+    assert any(rel.endswith(".crc") for rel in got["sidecars"])
+    for name, o in got["outputs"].items():
+        pages = sum(c["compressed"] for (top, _), c in got["columns"].items() if top == name)
+        assert pages <= o["parquet"]
+    assert output_bytes.main([out]) == 0
+    assert "chunks/chunk_content" in capsys.readouterr().out
 
 
 def test_failed_stage_leaves_failure_record(spark, tmp_path, monkeypatch):

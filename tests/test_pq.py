@@ -9,7 +9,7 @@ import pytest
 from iris_project_database_refresh_spark.operators import pq
 from iris_project_database_refresh_spark.operators.embeddings import knn_brute_force
 
-from .conftest import SF_CORRECT, assert_matches_oracle, job_group
+from .conftest import SF_CORRECT, assert_matches_oracle, job_group, output_bytes
 
 SF_BENCH = os.path.join(os.path.dirname(SF_CORRECT), "sf0.1")  # the bench corpus, beside SF_CORRECT
 
@@ -130,6 +130,13 @@ def ivf_index(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("ivf_index"))
     build_ivf_index(spark, SF_CORRECT, d)
     return d
+
+
+def test_ivf_index_files_are_zstd(ivf_index):
+    """Every column chunk of the index's codebook and cells is zstd-compressed."""
+    columns = output_bytes.output_bytes(ivf_index)["columns"]
+    assert {top for top, _ in columns} == {"codebook", "cells"}
+    assert set().union(*(c["codecs"] for c in columns.values())) == {"ZSTD"}
 
 
 def _local_queries(spark, qids, vecs):

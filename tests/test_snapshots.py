@@ -12,6 +12,8 @@ from iris_project_database_refresh_spark.sinks.snapshots import (
     snapshot_write,
 )
 
+from .conftest import job_group
+
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
@@ -287,3 +289,23 @@ def test_failed_manifest_commit_keeps_previous_version(spark, table):
     assert sorted(os.listdir(log)) == log_files
     assert [h["version"] for h in snapshot_history(d)] == [v1, v2, v3]
     assert _rows(snapshot_read(spark, d)) == before
+
+
+def test_partition_values_read_back_unescaped(spark, tmp_path):
+    """Spark escapes partition directory names (`a%2Fb`, `50%25`) and
+    names a NULL value `__HIVE_DEFAULT_PARTITION__`; the values read back
+    as written."""
+    d = str(tmp_path / "escaped")
+    rows = [(1, "a/b"), (2, None), (3, "x y"), (4, "50%")]
+    snapshot_write(spark.createDataFrame(rows, "id long, day string"), d, partition_col="day")
+    assert sorted(tuple(r) for r in snapshot_read(spark, d).collect()) == rows
+
+
+def test_snapshot_read_plans_without_a_job(spark, table):
+    """Each partition group is read with the committed schema, so building
+    the read starts no schema-inference job."""
+    d, *_ = table
+    with job_group(spark, "snapshot_read_plan") as jobs:
+        df = snapshot_read(spark, d)
+    assert jobs == []
+    assert df.columns == ["id", "day", "v"]

@@ -1,6 +1,10 @@
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql import DataFrameWriter
 
 from iris_project_database_refresh_spark.streaming import pipeline as sp
 from iris_project_database_refresh_spark.streaming.upsert_sink import (
@@ -42,9 +46,31 @@ def test_merge_replaces_keys(spark, tmp_path):
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
-# --- JDBC sink executed end-to-end against in-process Derby ------------------
+def test_merge_leaves_only_the_table(spark, tmp_path):
+    table = ParquetUpsertTable(spark, str(tmp_path / "t"), key="k")
+    table.merge(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    table.merge(spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"))
+    assert os.listdir(tmp_path) == ["t"]
 
-import pytest
+
+def test_failed_final_write_keeps_the_staging_copy(spark, tmp_path, monkeypatch):
+    table = ParquetUpsertTable(spark, str(tmp_path / "t"), key="k")
+    table.merge(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    parquet = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if path == table.path:
+            raise RuntimeError("final write failed")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    with pytest.raises(RuntimeError, match="final write failed"):
+        table.merge(spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"))
+    staged = spark.read.parquet(table.path + "__staging").collect()
+    assert sorted((r.k, r.v) for r in staged) == [(1, "a"), (2, "B"), (3, "c")]
+
+
+# --- JDBC sink executed end-to-end against in-process Derby ------------------
 
 from iris_project_database_refresh_spark.sinks.jdbc import JdbcUpsertSink
 
