@@ -6,8 +6,9 @@ excel prep/excel_to_pdf_prep.py`, `semantic search - ey prep/
 stage_00_chapter_splitter.py` (PDF bytes in, PDF bytes out), and
 `catalog search - vision/stage2_process_vision.py` feeds page images to
 a vision model. Generalized: media lives in an opaque ``binary``
-column with typed metadata; decode/resize/frame-sample run as
-``mapInPandas`` stages.
+column with typed metadata; the stub decode/resize/frame-sample run as
+``mapInPandas`` stages, and every other payload parse runs through the
+one Arrow-batched driver `decode_rows`.
 
 The container has no image/audio libraries, so the actual decoder is a
 STUB: `decode_features` produces a deterministic md5-derived fake
@@ -16,9 +17,9 @@ Arrow batching, partition-preserving plumbing — is real and tested; a
 production deployment swaps `_fake_decode` for PIL/ffmpeg behind the
 same signature.
 
-Scale: payload bytes never leave executors; mapInPandas streams Arrow
-batches, so peak memory is one batch of payloads per core, not one
-partition of rows — set MAX_BATCH_ROWS accordingly for big media.
+Scale: payload bytes never leave executors; mapInPandas and mapInArrow
+stream Arrow batches, so peak memory is one batch of payloads per core,
+not one partition of rows — set MAX_BATCH_ROWS accordingly for big media.
 """
 
 from __future__ import annotations
@@ -27,14 +28,44 @@ import hashlib
 from typing import Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..sources.tables import load_table
 
 MEDIA_TYPES = ("image", "audio", "video")
 MAX_BATCH_ROWS = 256  # keep payload batches bounded for real media sizes
+
+
+def decode_rows(frame: DataFrame, parse, schema: T.StructType, parser: str | None) -> DataFrame:
+    """The Arrow-batched decode driver of the media-decode queries.
+
+    ``frame`` has two columns: a key (``media_id``, or ``grp``) and a
+    binary payload. ``parse(payload)`` returns None (the payload yields
+    no row), one row dict or a list of row dicts. Each row gets the key
+    and, as its ``parser`` column, the tag ``parser`` (None where the
+    schema has no such column). ``schema`` alone types the output: a
+    row key it does not name is dropped, a column a row lacks is NULL.
+    Each input batch is parsed MAX_BATCH_ROWS payloads at a time.
+    """
+    key = frame.columns[0]
+    arrow_schema = to_arrow_schema(schema)
+
+    def fn(batches):
+        for batch in batches:
+            for start in range(0, batch.num_rows, MAX_BATCH_ROWS):
+                part = batch.slice(start, MAX_BATCH_ROWS)
+                rows = []
+                for k, payload in zip(part.column(0).to_pylist(), part.column(1).to_pylist()):
+                    out = parse(payload)
+                    for row in [out] if isinstance(out, dict) else out or ():
+                        rows.append({key: k, **row, "parser": parser})
+                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+
+    return frame.mapInArrow(fn, schema)
 
 # Session-scoped plant-plan registry (r10, the r9 verdict's "bench pays
 # plant construction once, not per consumer" item). The planted-payload
@@ -386,7 +417,7 @@ ORACLES["multimodal_resize"] = MULTIMODAL_RESIZE_SQL
 # at least one exact band (pigeonhole), so the bucket join finds
 # every pair the threshold admits — no all-pairs product.
 #
-# The kernel runs in the same Arrow-batched mapInPandas stage as the
+# The kernel runs in the same Arrow-batched driver (`decode_rows`) as the
 # other media kernels (payload bytes never reach the driver); the
 # oracle recomputes the identical integer hash from the text (ASCII
 # corpus: bytes == code points).
@@ -426,18 +457,12 @@ def _byte_energy_phash(payload: bytes) -> int:
 
 
 def phash_media(media: DataFrame) -> DataFrame:
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                yield pd.DataFrame(
-                    {
-                        "media_id": part["media_id"].to_numpy(),
-                        "phash": [_byte_energy_phash(p) for p in part["payload"]],
-                    }
-                )
-
-    return media.mapInPandas(fn, PHASH_SCHEMA)
+    return decode_rows(
+        media.select("media_id", "payload"),
+        lambda payload: {"phash": _byte_energy_phash(payload)},
+        PHASH_SCHEMA,
+        None,
+    )
 
 
 def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -533,7 +558,7 @@ ORACLES["multimodal_phash_dedup"] = MULTIMODAL_PHASH_SQL
 # field hash-mismatches.
 #
 # Scale: container bytes never leave executors; the kernel is a
-# bounded mapInPandas batch like the image path.
+# bounded `decode_rows` batch like the image path.
 
 AUDIO_SCHEMA = T.StructType(
     [
@@ -620,44 +645,20 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched WAV header parse over the planted audio items."""
     audio = audio_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = parse_wav_header(payload)
+        if parsed is None:
+            return None
+        rate, channels, bits, n_frames = parsed
+        return {
+            "sample_rate": rate,
+            "channels": channels,
+            "bits": bits,
+            "n_frames": n_frames,
+            "duration_ms": n_frames * 1000 // rate,
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_wav_header(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rate, channels, bits, n_frames = parsed
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "sample_rate": rate,
-                            "channels": channels,
-                            "bits": bits,
-                            "n_frames": n_frames,
-                            "duration_ms": n_frames * 1000 // rate,
-                            "parser": "wav-stdlib",
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=[f.name for f in AUDIO_SCHEMA.fields],
-                ).astype(
-                    {
-                        "media_id": "int64",
-                        "sample_rate": "int64",
-                        "channels": "int64",
-                        "bits": "int64",
-                        "n_frames": "int64",
-                        "duration_ms": "int64",
-                    }
-                )
-
-    return audio.mapInPandas(fn, AUDIO_SCHEMA)
+    return decode_rows(audio, row, AUDIO_SCHEMA, "wav-stdlib")
 
 
 # The oracle recomputes every field from the planted parameters — the
@@ -696,7 +697,7 @@ ORACLES["multimodal_audio_stats"] = MULTIMODAL_AUDIO_SQL
 # hash-mismatches.
 #
 # Scale: same contract as the audio path — payload bytes never leave
-# executors, bounded mapInPandas batches; frame sampling at 100 TB
+# executors, bounded `decode_rows` batches; frame sampling at 100 TB
 # seeks header + frame offsets instead of materializing frames.
 
 VIDEO_SCHEMA = T.StructType(
@@ -811,45 +812,21 @@ def multimodal_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched Y4M stream parse over the planted video items."""
     video = video_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = parse_y4m_stream(payload)
+        if parsed is None:
+            return None
+        w, h, num, den, n_frames = parsed
+        return {
+            "width": w,
+            "height": h,
+            "fps_num": num,
+            "fps_den": den,
+            "n_frames": n_frames,
+            "duration_ms": n_frames * 1000 * den // num,
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_y4m_stream(bytes(payload))
-                    if parsed is None:
-                        continue
-                    w, h, num, den, n_frames = parsed
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "width": w,
-                            "height": h,
-                            "fps_num": num,
-                            "fps_den": den,
-                            "n_frames": n_frames,
-                            "duration_ms": n_frames * 1000 * den // num,
-                            "parser": "y4m-stdlib",
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in VIDEO_SCHEMA.fields]
-                ).astype(
-                    {
-                        "media_id": "int64",
-                        "width": "int64",
-                        "height": "int64",
-                        "fps_num": "int64",
-                        "fps_den": "int64",
-                        "n_frames": "int64",
-                        "duration_ms": "int64",
-                    }
-                )
-
-    return video.mapInPandas(fn, VIDEO_SCHEMA)
+    return decode_rows(video, row, VIDEO_SCHEMA, "y4m-stdlib")
 
 
 # The oracle recomputes every field from the planted parameters — the
@@ -931,41 +908,19 @@ def iter_y4m_frames(payload: bytes):
 def multimodal_framesample_y4m(spark: SparkSession, sf_dir: str) -> DataFrame:
     video = video_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def frames(payload: bytes) -> list[dict]:
+        return [
+            {
+                "frame_idx": idx,
+                "ts_ms": idx * 1000 * den // num,
+                "width": w,
+                "height": h,
+                "frame_hash": hashlib.md5(frame.hex().upper().encode()).hexdigest(),
+            }
+            for idx, w, h, num, den, frame in iter_y4m_frames(payload)
+        ]
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    for idx, w, h, num, den, frame in iter_y4m_frames(bytes(payload)):
-                        rows.append(
-                            {
-                                "media_id": int(mid),
-                                "frame_idx": idx,
-                                "ts_ms": idx * 1000 * den // num,
-                                "width": w,
-                                "height": h,
-                                "frame_hash": hashlib.md5(
-                                    frame.hex().upper().encode()
-                                ).hexdigest(),
-                                "parser": "y4m-stdlib",
-                            }
-                        )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in FRAME_Y4M_SCHEMA.fields]
-                ).astype(
-                    {
-                        "media_id": "int64",
-                        "frame_idx": "int64",
-                        "ts_ms": "int64",
-                        "width": "int64",
-                        "height": "int64",
-                    }
-                )
-
-    return video.mapInPandas(fn, FRAME_Y4M_SCHEMA)
+    return decode_rows(video, frames, FRAME_Y4M_SCHEMA, "y4m-stdlib")
 
 
 # The oracle re-derives every frame's hash from the planted text bytes
@@ -1215,7 +1170,7 @@ ORACLES["multimodal_pairing_audit"] = MULTIMODAL_PAIRING_SQL
 # and sign handling — a kernel mis-parse (wrong data offset, byte
 # order, window walk) hash-mismatches.
 #
-# Scale: the same mapInPandas contract as the other media kernels —
+# Scale: the same `decode_rows` contract as the other media kernels —
 # payloads never hit the driver, windows are O(bytes) per row, no
 # shuffle at all.
 
@@ -1264,49 +1219,36 @@ def _wav_data_words(payload: bytes) -> tuple[int, int, list[int]] | None:
 def multimodal_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio = audio_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = _wav_data_words(payload)
+        if parsed is None:
+            return None
+        rate, channels, words = parsed
+        nf = len(words) // AUDIO_WIN_WORDS
+        if nf < 1:
+            return None
+        flags = []
+        for f in range(nf):
+            w = words[f * AUDIO_WIN_WORDS : (f + 1) * AUDIO_WIN_WORDS]
+            energy = sum(abs(s) for s in w) // AUDIO_WIN_WORDS
+            flags.append(energy < SILENCE_GATE)
+        lead = next((i for i, s in enumerate(flags) if not s), nf)
+        tail = (
+            0
+            if lead == nf
+            else next((i for i, s in enumerate(reversed(flags)) if not s), 0)
+        )
+        kept = nf - lead - tail
+        return {
+            "n_windows": nf,
+            "n_silent": sum(flags),
+            "lead_trim": lead,
+            "tail_trim": tail,
+            "kept_windows": kept,
+            "kept_ms": kept * AUDIO_WIN_WORDS * 1000 // (rate * channels),
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = _wav_data_words(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rate, channels, words = parsed
-                    nf = len(words) // AUDIO_WIN_WORDS
-                    if nf < 1:
-                        continue
-                    flags = []
-                    for f in range(nf):
-                        w = words[f * AUDIO_WIN_WORDS : (f + 1) * AUDIO_WIN_WORDS]
-                        energy = sum(abs(s) for s in w) // AUDIO_WIN_WORDS
-                        flags.append(energy < SILENCE_GATE)
-                    lead = next((i for i, s in enumerate(flags) if not s), nf)
-                    tail = (
-                        0
-                        if lead == nf
-                        else next((i for i, s in enumerate(reversed(flags)) if not s), 0)
-                    )
-                    kept = nf - lead - tail
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "n_windows": nf,
-                            "n_silent": sum(flags),
-                            "lead_trim": lead,
-                            "tail_trim": tail,
-                            "kept_windows": kept,
-                            "kept_ms": kept * AUDIO_WIN_WORDS * 1000 // (rate * channels),
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in TRIM_SCHEMA.fields]
-                ).astype({f.name: "int64" for f in TRIM_SCHEMA.fields})
-
-    return audio.mapInPandas(fn, TRIM_SCHEMA)
+    return decode_rows(audio, row, TRIM_SCHEMA, None)
 
 
 _WORD_ABS = (
@@ -1381,7 +1323,7 @@ ORACLES["multimodal_silence_trim"] = SILENCE_TRIM_SQL
 # slice of the document's utf-8 bytes, so DuckDB recomputes every
 # pairwise difference from hex(encode(text)) byte-by-byte (hex-domain
 # device) — a kernel that mis-walks FRAME markers or chroma sizes
-# hash-mismatches.  Same mapInPandas contract: payloads stay on
+# hash-mismatches.  Same `decode_rows` contract: payloads stay on
 # executors, work is O(bytes) per row, no shuffle.
 
 SHOT_GATE = 30  # mean |dY| above this = cut (upper tail of the planted stream)
@@ -1420,43 +1362,28 @@ def _y4m_y_planes(payload: bytes) -> tuple[int, int, list[bytes]] | None:
 def multimodal_shot_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     video = video_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = _y4m_y_planes(payload)
+        if parsed is None:
+            return None
+        w, h, planes = parsed
+        if len(planes) < 2:
+            return None
+        diffs = [
+            sum(abs(a - b) for a, b in zip(p0, p1)) // (w * h)
+            for p0, p1 in zip(planes, planes[1:])
+        ]
+        cuts = [d > SHOT_GATE for d in diffs]
+        return {
+            "n_frames": len(planes),
+            "n_pairs": len(diffs),
+            "n_cuts": sum(cuts),
+            "first_cut_pair": next((i + 1 for i, c in enumerate(cuts) if c), 0),
+            "max_diff": max(diffs),
+            "mean_diff": sum(diffs) // len(diffs),
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = _y4m_y_planes(bytes(payload))
-                    if parsed is None:
-                        continue
-                    w, h, planes = parsed
-                    if len(planes) < 2:
-                        continue
-                    diffs = [
-                        sum(abs(a - b) for a, b in zip(p0, p1)) // (w * h)
-                        for p0, p1 in zip(planes, planes[1:])
-                    ]
-                    cuts = [d > SHOT_GATE for d in diffs]
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "n_frames": len(planes),
-                            "n_pairs": len(diffs),
-                            "n_cuts": sum(cuts),
-                            "first_cut_pair": next(
-                                (i + 1 for i, c in enumerate(cuts) if c), 0
-                            ),
-                            "max_diff": max(diffs),
-                            "mean_diff": sum(diffs) // len(diffs),
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in SHOT_SCHEMA.fields]
-                ).astype({f.name: "int64" for f in SHOT_SCHEMA.fields})
-
-    return video.mapInPandas(fn, SHOT_SCHEMA)
+    return decode_rows(video, row, SHOT_SCHEMA, None)
 
 
 _VBYTE = "CAST('0x' || substr(hx, ({o}) * 2 + 1, 2) AS BIGINT)"
@@ -1508,7 +1435,7 @@ ORACLES["multimodal_shot_detect"] = SHOT_DETECT_SQL
 # plan and hash-mismatches; the oracle recomputes from the planted
 # parameters.
 #
-# Plan: the production video parse (mapInPandas) + per-row integer
+# Plan: the production video parse (`decode_rows`) + per-row integer
 # arithmetic; no shuffle.
 
 VIT_PATCH = 4
@@ -1532,41 +1459,28 @@ PATCH_SCHEMA = T.StructType(
 def multimodal_patch_grid_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     video = video_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = parse_y4m_stream(payload)
+        if parsed is None:
+            return None
+        w, h, _num, _den, nf = parsed
+        if nf < 1:
+            return None
+        tx = -(-w // VIT_PATCH)
+        ty = -(-h // VIT_PATCH)
+        return {
+            "width": w,
+            "height": h,
+            "n_frames": nf,
+            "tiles_x": tx,
+            "tiles_y": ty,
+            "pad_x": tx * VIT_PATCH - w,
+            "pad_y": ty * VIT_PATCH - h,
+            "patches_per_frame": tx * ty,
+            "total_patches": tx * ty * nf,
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_y4m_stream(bytes(payload))
-                    if parsed is None:
-                        continue
-                    w, h, _num, _den, nf = parsed
-                    if nf < 1:
-                        continue
-                    tx = -(-w // VIT_PATCH)
-                    ty = -(-h // VIT_PATCH)
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "width": w,
-                            "height": h,
-                            "n_frames": nf,
-                            "tiles_x": tx,
-                            "tiles_y": ty,
-                            "pad_x": tx * VIT_PATCH - w,
-                            "pad_y": ty * VIT_PATCH - h,
-                            "patches_per_frame": tx * ty,
-                            "total_patches": tx * ty * nf,
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in PATCH_SCHEMA.fields]
-                ).astype({f.name: "int64" for f in PATCH_SCHEMA.fields})
-
-    return video.mapInPandas(fn, PATCH_SCHEMA)
+    return decode_rows(video, row, PATCH_SCHEMA, None)
 
 
 PATCH_GRID_SQL = f"""
@@ -1624,36 +1538,23 @@ LOUDNESS_SCHEMA = T.StructType(
 def multimodal_loudness_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio = audio_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = _wav_data_words(payload)
+        if parsed is None:
+            return None
+        _rate, _channels, words = parsed
+        if not words:
+            return None
+        peak = max(abs(s) for s in words)
+        return {
+            "n_samples": len(words),
+            "peak": peak,
+            "mean_abs": sum(abs(s) for s in words) // len(words),
+            "gain_milli": LOUDNESS_TARGET * 1000 // peak if peak else 0,
+            "already_hot": 1 if peak > LOUDNESS_TARGET else 0,
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = _wav_data_words(bytes(payload))
-                    if parsed is None:
-                        continue
-                    _rate, _channels, words = parsed
-                    if not words:
-                        continue
-                    peak = max(abs(s) for s in words)
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "n_samples": len(words),
-                            "peak": peak,
-                            "mean_abs": sum(abs(s) for s in words) // len(words),
-                            "gain_milli": LOUDNESS_TARGET * 1000 // peak if peak else 0,
-                            "already_hot": 1 if peak > LOUDNESS_TARGET else 0,
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in LOUDNESS_SCHEMA.fields]
-                ).astype({f.name: "int64" for f in LOUDNESS_SCHEMA.fields})
-
-    return audio.mapInPandas(fn, LOUDNESS_SCHEMA)
+    return decode_rows(audio, row, LOUDNESS_SCHEMA, None)
 
 
 LOUDNESS_SQL = f"""
@@ -1805,46 +1706,18 @@ def multimodal_exif_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched TIFF/EXIF IFD walk over the planted image items."""
     images = tiff_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import pandas as pd
+    def row(payload: bytes) -> dict | None:
+        parsed = parse_tiff_header(payload)
+        if parsed is None:
+            return None
+        w, h = parsed["width"], parsed["height"]
+        return {
+            **parsed,
+            "n_pixels": w * h,
+            "aspect_milli": w * 1000 // h,
+        }
 
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_tiff_header(bytes(payload))
-                    if parsed is None:
-                        continue
-                    w, h = parsed["width"], parsed["height"]
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "byte_order": parsed["byte_order"],
-                            "width": w,
-                            "height": h,
-                            "orientation": parsed["orientation"],
-                            "resolution_unit": parsed["resolution_unit"],
-                            "n_pixels": w * h,
-                            "aspect_milli": w * 1000 // h,
-                            "parser": "tiff-stdlib",
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in EXIF_SCHEMA.fields]
-                ).astype(
-                    {
-                        "media_id": "int64",
-                        "width": "int64",
-                        "height": "int64",
-                        "orientation": "int64",
-                        "resolution_unit": "int64",
-                        "n_pixels": "int64",
-                        "aspect_milli": "int64",
-                    }
-                )
-
-    return images.mapInPandas(fn, EXIF_SCHEMA)
+    return decode_rows(images, row, EXIF_SCHEMA, "tiff-stdlib")
 
 
 # Oracle: every field recomputed arithmetically from the planted params.
@@ -1997,27 +1870,7 @@ def parse_png(payload: bytes) -> dict | None:
 def multimodal_png_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched PNG chunk walk + CRC audit over the planted items."""
     pngs = png_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_png(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {"media_id": int(mid), **parsed, "parser": "png-stdlib"}
-                    )
-                cols = [f.name for f in PNG_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return pngs.mapInPandas(fn, PNG_SCHEMA)
+    return decode_rows(pngs, parse_png, PNG_SCHEMA, "png-stdlib")
 
 
 # Oracle: every field recomputed arithmetically from the planted params
@@ -2161,38 +2014,18 @@ def multimodal_id3_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched ID3v2.3 tag walk over the planted audio items."""
     items = id3_table(spark, sf_dir).select("media_id", "payload")
 
-    def fn(batches):
-        import hashlib
+    def row(payload: bytes) -> dict | None:
+        parsed = parse_id3(payload)
+        if parsed is None:
+            return None
+        return {
+            **parsed,
+            "title_md5": hashlib.md5(parsed["title"].encode()).hexdigest(),
+            "artist_md5": hashlib.md5(parsed["artist"].encode()).hexdigest(),
+            "album_md5": hashlib.md5(parsed["album"].encode()).hexdigest(),
+        }
 
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_id3(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {
-                            "media_id": int(mid),
-                            "version": parsed["version"],
-                            "tag_size": parsed["tag_size"],
-                            "n_frames": parsed["n_frames"],
-                            "track": parsed["track"],
-                            "title_md5": hashlib.md5(parsed["title"].encode()).hexdigest(),
-                            "artist_md5": hashlib.md5(parsed["artist"].encode()).hexdigest(),
-                            "album_md5": hashlib.md5(parsed["album"].encode()).hexdigest(),
-                            "parser": "id3-stdlib",
-                        }
-                    )
-                cols = [f.name for f in ID3_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in ("media_id", "version", "tag_size", "n_frames", "track")}
-                )
-
-    return items.mapInPandas(fn, ID3_SCHEMA)
+    return decode_rows(items, row, ID3_SCHEMA, "id3-stdlib")
 
 
 # Oracle: all fields — tag size included — recomputed arithmetically
@@ -2383,25 +2216,7 @@ def parse_jpeg(payload: bytes) -> dict | None:
 def multimodal_jpeg_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched JPEG marker walk over the planted media items."""
     jpegs = jpeg_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_jpeg(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "jpeg-stdlib"})
-                cols = [f.name for f in JPEG_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return jpegs.mapInPandas(fn, JPEG_SCHEMA)
+    return decode_rows(jpegs, parse_jpeg, JPEG_SCHEMA, "jpeg-stdlib")
 
 
 # Oracle: every field recomputed arithmetically from the planted
@@ -2603,25 +2418,7 @@ def parse_gif(payload: bytes) -> dict | None:
 def multimodal_gif_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched GIF block walk over the planted media items."""
     gifs = gif_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_gif(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "gif-stdlib"})
-                cols = [f.name for f in GIF_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return gifs.mapInPandas(fn, GIF_SCHEMA)
+    return decode_rows(gifs, parse_gif, GIF_SCHEMA, "gif-stdlib")
 
 
 # Oracle: every field pinned arithmetically from the planted params
@@ -2759,25 +2556,7 @@ def parse_flac(payload: bytes) -> dict | None:
 def multimodal_flac_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched FLAC metadata walk over the planted media items."""
     flacs = flac_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_flac(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "flac-stdlib"})
-                cols = [f.name for f in FLAC_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "audio_md5")}
-                )
-
-    return flacs.mapInPandas(fn, FLAC_SCHEMA)
+    return decode_rows(flacs, parse_flac, FLAC_SCHEMA, "flac-stdlib")
 
 
 _FLAC_RATES_SQL = "[" + ", ".join(str(r) for r in FLAC_RATES) + "]"
@@ -2918,25 +2697,7 @@ def parse_bmp(payload: bytes) -> dict | None:
 def multimodal_bmp_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched BMP header parse over the planted media items."""
     bmps = bmp_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_bmp(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "bmp-stdlib"})
-                cols = [f.name for f in BMP_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return bmps.mapInPandas(fn, BMP_SCHEMA)
+    return decode_rows(bmps, parse_bmp, BMP_SCHEMA, "bmp-stdlib")
 
 
 MULTIMODAL_BMP_SQL = """
@@ -3125,25 +2886,7 @@ def parse_zip(payload: bytes) -> dict | None:
 def multimodal_zip_central_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched ZIP central-directory walk over the planted items."""
     zips = zip_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_zip(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "zip-stdlib"})
-                cols = [f.name for f in ZIP_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "names_md5")}
-                )
-
-    return zips.mapInPandas(fn, ZIP_SCHEMA)
+    return decode_rows(zips, parse_zip, ZIP_SCHEMA, "zip-stdlib")
 
 
 MULTIMODAL_ZIP_SQL = f"""
@@ -3320,25 +3063,7 @@ def parse_mp4(payload: bytes) -> dict | None:
 def multimodal_mp4_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched BMFF box walk over the planted media items."""
     mp4s = mp4_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_mp4(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "mp4-stdlib"})
-                cols = [f.name for f in MP4_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return mp4s.mapInPandas(fn, MP4_SCHEMA)
+    return decode_rows(mp4s, parse_mp4, MP4_SCHEMA, "mp4-stdlib")
 
 
 _MP4_TS_SQL = "[" + ", ".join(str(t) for t in MP4_TIMESCALES) + "]"
@@ -3485,25 +3210,7 @@ def parse_tar(payload: bytes) -> dict | None:
 def multimodal_tar_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched ustar header walk over the planted media items."""
     tars = tar_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_tar(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "tar-stdlib"})
-                cols = [f.name for f in TAR_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "names_md5")}
-                )
-
-    return tars.mapInPandas(fn, TAR_SCHEMA)
+    return decode_rows(tars, parse_tar, TAR_SCHEMA, "tar-stdlib")
 
 
 MULTIMODAL_TAR_SQL = """
@@ -3669,25 +3376,7 @@ PDF_SCHEMA = T.StructType(
 def multimodal_pdf_xref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched PDF xref walk over the planted media items."""
     pdfs = pdf_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_pdf(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "pdf-stdlib"})
-                cols = [f.name for f in PDF_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return pdfs.mapInPandas(fn, PDF_SCHEMA)
+    return decode_rows(pdfs, parse_pdf, PDF_SCHEMA, "pdf-stdlib")
 
 
 _PDF_XREF_AT = {
@@ -3907,7 +3596,7 @@ ORACLES["multimodal_sniff_router"] = _sniff_oracle_sql()
 # doc plants page 2's CRC one bit off, counted in crc_bad).
 #
 # Scale: same contract as the sibling kernels — Arrow-batched
-# mapInPandas, payloads never reach the driver, oracle recomputes
+# `decode_rows`, payloads never reach the driver, oracle recomputes
 # every field arithmetically from the plant parameters.
 
 OGG_SCHEMA = T.StructType(
@@ -4123,25 +3812,7 @@ def parse_ogg(payload: bytes) -> dict | None:
 def multimodal_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched Ogg page walk over the planted media items."""
     oggs = ogg_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_ogg(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "ogg-stdlib"})
-                cols = [f.name for f in OGG_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return oggs.mapInPandas(fn, OGG_SCHEMA)
+    return decode_rows(oggs, parse_ogg, OGG_SCHEMA, "ogg-stdlib")
 
 
 MULTIMODAL_OGG_SQL = """
@@ -4242,25 +3913,7 @@ def parse_webp_vp8l(payload: bytes) -> dict | None:
 def multimodal_webp_vp8l(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched WebP/VP8L header walk over the planted media."""
     webps = webp_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_webp_vp8l(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"media_id": int(mid), **parsed, "parser": "webp-stdlib"})
-                cols = [f.name for f in WEBP_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c != "parser"}
-                )
-
-    return webps.mapInPandas(fn, WEBP_SCHEMA)
+    return decode_rows(webps, parse_webp_vp8l, WEBP_SCHEMA, "webp-stdlib")
 
 
 MULTIMODAL_WEBP_SQL = """
@@ -4308,7 +3961,7 @@ ORACLES["multimodal_sniff_router"] = _sniff_oracle_sql()
 # rather than trusting /Length.
 #
 # Scale: same contract as the sibling kernels — Arrow-batched
-# mapInPandas, payloads never reach the driver, and the oracle
+# `decode_rows`, payloads never reach the driver, and the oracle
 # recomputes every field (including the extracted-text md5) purely
 # arithmetically from the plant parameters.
 
@@ -4567,27 +4220,7 @@ PDF_TEXT_SCHEMA = T.StructType(
 def multimodal_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched PDF content-stream text extraction."""
     pdfs = pdf_text_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_pdf_text(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {"media_id": int(mid), **parsed, "parser": "pdftext-stdlib"}
-                    )
-                cols = [f.name for f in PDF_TEXT_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "text_md5")}
-                )
-
-    return pdfs.mapInPandas(fn, PDF_TEXT_SCHEMA)
+    return decode_rows(pdfs, parse_pdf_text, PDF_TEXT_SCHEMA, "pdftext-stdlib")
 
 
 # per-page extracted text: 'Page ' + 32-char md5 + TJ pieces + hex Tj
@@ -4853,27 +4486,7 @@ OOXML_SCHEMA = T.StructType(
 def multimodal_ooxml_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched OOXML content walk over the planted containers."""
     items = ooxml_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_ooxml(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {"media_id": int(mid), **parsed, "parser": "ooxml-stdlib"}
-                    )
-                cols = [f.name for f in OOXML_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "kind", "content_md5")}
-                )
-
-    return items.mapInPandas(fn, OOXML_SCHEMA)
+    return decode_rows(items, parse_ooxml, OOXML_SCHEMA, "ooxml-stdlib")
 
 
 def _ooxml_oracle_sql() -> str:
@@ -5072,31 +4685,7 @@ def parse_pdf_flate(payload: bytes) -> dict | None:
 def multimodal_pdf_flate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched FlateDecode content-stream extraction."""
     pdfs = pdf_flate_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_pdf_flate(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {"media_id": int(mid), **parsed, "parser": "flate-stdlib"}
-                    )
-                cols = [f.name for f in PDF_FLATE_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {
-                        c: "int64"
-                        for c in cols
-                        if c not in ("parser", "text_md5", "title_md5")
-                    }
-                )
-
-    return pdfs.mapInPandas(fn, PDF_FLATE_SCHEMA)
+    return decode_rows(pdfs, parse_pdf_flate, PDF_FLATE_SCHEMA, "flate-stdlib")
 
 
 def _pdf_flate_oracle_sql() -> str:
@@ -5240,7 +4829,7 @@ def parse_zip_deflate(payload: bytes) -> dict | None:
     CRC over the UNCOMPRESSED bytes on read.  A corrupt deflate body is
     COUNTED (``crc_bad``), never raised, matching the FlateDecode/PNG
     kernels' corrupt-byte-recovery contract — one bad payload must not
-    kill the whole mapInPandas task."""
+    kill the whole decode task."""
     import hashlib
     import io
     import zipfile
@@ -5283,31 +4872,7 @@ def parse_zip_deflate(payload: bytes) -> dict | None:
 def multimodal_zip_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched deflated-zip walk over the planted containers."""
     zips = zip_deflate_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_zip_deflate(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        {"media_id": int(mid), **parsed, "parser": "zipdef-stdlib"}
-                    )
-                cols = [f.name for f in ZDEF_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {
-                        c: "int64"
-                        for c in cols
-                        if c not in ("parser", "content_md5", "meta_md5")
-                    }
-                )
-
-    return zips.mapInPandas(fn, ZDEF_SCHEMA)
+    return decode_rows(zips, parse_zip_deflate, ZDEF_SCHEMA, "zipdef-stdlib")
 
 
 def _zdef_oracle_sql() -> str:
@@ -5610,25 +5175,7 @@ def parse_pdf_merged(payload: bytes) -> dict | None:
 def multimodal_pdf_merge_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched verification walk over the written merge artifacts."""
     pdfs = pdf_merge_write_table(spark, sf_dir)
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for gid, payload in zip(part["grp"], part["payload"]):
-                    parsed = parse_pdf_merged(bytes(payload))
-                    if parsed is None:
-                        continue
-                    rows.append({"grp": int(gid), **parsed, "parser": "pdfmerge-stdlib"})
-                cols = [f.name for f in PMW_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {c: "int64" for c in cols if c not in ("parser", "outline_md5")}
-                )
-
-    return pdfs.mapInPandas(fn, PMW_SCHEMA)
+    return decode_rows(pdfs, parse_pdf_merged, PMW_SCHEMA, "pdfmerge-stdlib")
 
 
 def _pmw_oracle_sql() -> str:
@@ -5848,32 +5395,7 @@ def parse_xlsx_sheet_plan(payload: bytes) -> list[dict] | None:
 def multimodal_xlsx_sheet_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched per-sheet split plan over the planted workbooks."""
     items = xlsx_plan_table(spark, sf_dir).select("media_id", "payload")
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for start in range(0, len(pdf), MAX_BATCH_ROWS):
-                part = pdf.iloc[start : start + MAX_BATCH_ROWS]
-                rows = []
-                for mid, payload in zip(part["media_id"], part["payload"]):
-                    parsed = parse_xlsx_sheet_plan(bytes(payload))
-                    if parsed is None:
-                        continue
-                    for sheet in parsed:
-                        rows.append(
-                            {"media_id": int(mid), **sheet, "parser": "xlsxplan-stdlib"}
-                        )
-                cols = [f.name for f in XLSX_PLAN_SCHEMA.fields]
-                yield pd.DataFrame(rows, columns=cols).astype(
-                    {
-                        c: "int64"
-                        for c in cols
-                        if c not in ("parser", "sheet_name", "decision", "header_md5")
-                    }
-                )
-
-    return items.mapInPandas(fn, XLSX_PLAN_SCHEMA)
+    return decode_rows(items, parse_xlsx_sheet_plan, XLSX_PLAN_SCHEMA, "xlsxplan-stdlib")
 
 
 def _xlsx_plan_oracle_sql() -> str:

@@ -11,6 +11,15 @@ bytes; zstd packs that text, and an IVF index's vectors, much tighter
 than snappy (the measured sizes are beside the setting). The driver's
 one pyarrow writer (`plans/pipeline.StageMonitor.write`) asks for zstd
 too. Readers need no setting: Spark and pyarrow decode either codec.
+
+Spark keeps its compiled generated classes in a Guava cache of
+``spark.sql.codegen.cache.maxEntries`` entries (default 100), split
+into four segments that each evict on their own (25 entries each at the
+default). A refresh cycle uses about 78 generated classes, so in some
+fresh sessions the hashes put more than 25 of them in one segment, and
+every warm cycle then recompiles 16–28 classes (each about 20 ms, plus
+the JIT work on the new classes). The session keeps 1000 entries, four
+segments of 250, so a warm cycle compiles nothing.
 """
 
 from __future__ import annotations
@@ -42,6 +51,14 @@ def get_session(app_name: str = "iris-spark") -> SparkSession:
         # snappy bytes, so a refresh_long_docs cycle writes 1.38 bytes per
         # input byte, not 2.19, and an IVF build 0.89, not 1.21.
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # A refresh cycle keeps about 78 generated classes in the codegen
+        # cache. At the default 100 entries (four LRU segments of 25), 4 of 8
+        # fresh sessions on the seed-1 refresh_long_docs input (4 cores)
+        # overflowed one segment and recompiled 16-25 classes in every warm
+        # cycle; forcing that eviction (maxEntries=60) cost 0.14-0.99 s of
+        # CPU plus 0.1-1.4 s of JIT CPU a cycle. At 1000 (segments of 250) no
+        # warm cycle of 8 sessions compiled a class.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # events.parquet carries TIMESTAMP(NANOS); Spark has no nanos type,
         # so read as long and convert in the loader (sources/tables.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -17,7 +17,11 @@ media tree (file-level splits are governed by
 stdlib sniff/parse kernels the in-table multimodal operators use
 (``operators/multimodal.py``) in one Arrow-batched ``mapInPandas``
 pass — the lake-ingest dispatch (``multimodal_sniff_router``) applied
-to real files instead of planted table columns.
+to real files instead of planted table columns.  The in-table queries
+run those kernels through the decode driver ``multimodal.decode_rows``;
+this intake keeps its own pass because it emits one row per file, a
+kernel that raises included (a quarantine row), where the driver skips
+a payload that parses to None.
 """
 
 from __future__ import annotations

@@ -173,8 +173,9 @@ def test_warm_refresh_cycle_runs_at_most_sixteen_jobs(spark, refreshed, tmp_path
 def test_warm_refresh_stage_job_budgets(spark, refreshed, tmp_path, monkeypatch):
     """The merge numbers its appended rows from one collected aggregate
     (range sample, pinned exchange, the aggregate's two jobs, the
-    survivors' broadcast, the write), and the monitor log is written by
-    the driver without a Spark job."""
+    survivors' broadcast, the write), the delta reads ``documents`` with
+    its memoized schema (no schema-inference job), and the monitor log
+    is written by the driver without a Spark job."""
     run = StageMonitor.run
     jobs: dict[str, list[int]] = {}
 
@@ -186,7 +187,21 @@ def test_warm_refresh_stage_job_budgets(spark, refreshed, tmp_path, monkeypatch)
     run_refresh(spark, SF_CORRECT, str(tmp_path / "refresh"))
     assert set(jobs) == STAGES | {"monitor_flush"}
     assert 0 < len(jobs["catalog_merge"]) <= 6, jobs
+    assert 0 < len(jobs["delta_detection"]) <= 3, jobs
     assert jobs["monitor_flush"] == [], jobs
+
+
+def test_warm_refresh_cycle_compiles_no_generated_class(spark, tmp_path):
+    """A cycle keeps about 78 generated classes in Spark's codegen cache;
+    the session's cache holds 1000, so the third cycle over an unchanged
+    corpus finds every class it needs and compiles none."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    out = str(tmp_path / "refresh")
+    for _ in range(2):
+        run_refresh(spark, SF_CORRECT, out)
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    run_refresh(spark, SF_CORRECT, out)
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
 
 
 def test_failed_stage_leaves_one_readable_monitor_file(spark, tmp_path, monkeypatch):

@@ -198,3 +198,34 @@ def test_csv_quarantine_catches_malformed_rows(spark, tmp_path):
     assert got == [(1, "alpha", 10), (3, "gamma", 30)]
     quarantined = [r._corrupt_record for r in bad.collect()]
     assert quarantined == ["2,beta,not_a_number"]
+
+
+def test_load_table_reuses_its_inferred_schema(spark, tmp_path):
+    """A second load of an unchanged table starts no Spark job (the
+    schema is Spark's own, memoized per session) and still gives a fresh
+    relation: a self-join of two loads resolves."""
+    import pyarrow as pa
+
+    from .conftest import job_group
+
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), str(tmp_path / "documents.parquet"))
+    first = load_table(spark, str(tmp_path), "documents")
+    with job_group(spark, "load-table-warm") as jobs:
+        second = load_table(spark, str(tmp_path), "documents")
+    assert jobs == []
+    assert second.schema == first.schema == spark.read.parquet(str(tmp_path / "documents.parquet")).schema
+    a, b = first.alias("a"), second.alias("b")
+    assert a.join(b, F.col("a.doc_id") == F.col("b.doc_id")).count() == 2
+
+
+def test_load_table_infers_a_rewritten_table_again(spark, tmp_path):
+    """A table rewritten in place with a different size or mtime is
+    inferred again, so a new column shows."""
+    import pyarrow as pa
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": [1]}), path)
+    assert load_table(spark, str(tmp_path), "documents").columns == ["doc_id"]
+    pq.write_table(pa.table({"doc_id": [1], "text": ["a"]}), path)
+    os.utime(path, ns=(os.stat(path).st_atime_ns, os.stat(path).st_mtime_ns + 10**9))
+    assert load_table(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
